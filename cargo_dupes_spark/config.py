@@ -81,9 +81,11 @@ class PipelineConfig:
     fingerprint_bits: int = 64
 
     # --- streaming state layout ---
-    # stream_fps is hive/Iceberg-partitioned by pmod(fingerprint, N): the
-    # per-batch state probe prunes to the partitions the batch's own
-    # fingerprints can live in, instead of scanning the whole corpus state
+    # the url-keyed streaming payload tables (stream_sigs, stream_texts)
+    # are hive/Iceberg-partitioned by pmod(xxhash64(url), N): a batch
+    # fetches payload only for the few state urls its probe matched, and
+    # that fetch prunes to their partitions. The hash-keyed probe tables
+    # are flat (streaming/incremental.py says why).
     stream_fp_buckets: int = 64
 
     # --- clustering ---

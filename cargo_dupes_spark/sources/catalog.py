@@ -222,7 +222,7 @@ class Catalog:
 
         partition_by lays the table out hive-partitioned (Iceberg: identity
         partition spec) on the given columns so later reads filtered on them
-        prune whole partitions — the streaming state probe depends on it."""
+        prune whole partitions — the streaming payload fetch depends on it."""
         if self.iceberg:  # pragma: no cover - exercised only with the jar
             if self.spark.catalog.tableExists(self.table_ref(name)):
                 df.writeTo(self.table_ref(name)).append()

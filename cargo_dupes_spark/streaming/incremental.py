@@ -14,12 +14,7 @@ re-scanning the corpus. This module is that incremental path:
     fingerprint state table for hits, append new fingerprints to state and
     dup memberships to the output table. State lives in the Catalog
     (Iceberg/parquet), NOT in executor memory: state size is
-    corpus-bounded, so it belongs in a table joined per-batch. The state
-    table is PARTITIONED by fp_bucket = pmod(fingerprint, N)
-    (cfg.stream_fp_buckets): the probe reads only the partitions the
-    batch's own fingerprints can live in (``pruned_state`` — partition
-    pruning, not a full-state scan), so per-batch probe IO is bounded by
-    |batch's buckets| / N of the state, not O(corpus).
+    corpus-bounded, so it belongs in a table joined per-batch.
   * NEAR tier (``tiers=("exact", "near")``): each batch's canonical docs
     are checked against accumulated MinHash band-key state with the batch
     tier's exact shingle/signature config and verified by exact Jaccard —
@@ -30,6 +25,18 @@ re-scanning the corpus. This module is that incremental path:
     ``_process_substring_tier``.
   * ``windowed_doc_stats`` — watermark + windowed aggregation (late-data
     tolerant ingest monitoring: docs/tokens per lang per window).
+
+State layout. The three PROBE tables — ``stream_fps`` (exact),
+``stream_bands`` (near) and ``stream_winnow`` (substring) — are flat and
+read whole by every batch. They are keyed by hashes, and a batch of B
+distinct keys leaves on average N·((N-1)/N)^B of N hash buckets untouched
+(0.6 of 64 at B = 300), so a bucketed layout never pruned; it only
+multiplied each append into one file per bucket per writer task. The two
+PAYLOAD tables — ``stream_sigs`` and ``stream_texts`` — stay partitioned
+by pmod(xxhash64(url), cfg.stream_fp_buckets): a batch fetches them only
+for the few urls its probe matched, and that fetch does prune
+(``matched_payload``). ``_flatten_probe_tables`` rewrites probe tables
+that an earlier revision wrote bucketed, once, at stream start.
 
 Exactly-once notes: the streaming checkpoint (``checkpointLocation``) makes
 the file source replay a failed batch; the state/membership appends are
@@ -42,12 +49,19 @@ dedup. Residual insurance (a crash between the two appends re-committing
 identical rows) is a full-row dropDuplicates at read: replayed rows carry
 the SAME batch_id, so duplicates are exact-row duplicates and the dedup is
 deterministic. ``load_stream_dups`` likewise dedups on (url, matched_url).
+The exact tier's commit runs concurrently with the near/substring tiers
+(they read only the exact probe's canonical docs), so a crash can leave
+either side committed without the other; both orders replay to the state
+a clean run writes (``_process_exact_tier``).
 """
 
 from __future__ import annotations
 
+import os
 import shutil
-import uuid
+import threading
+from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,22 +104,37 @@ def _fingerprint_batch(
     contract), gated the same way so boilerplate/tiny docs never enter
     dedup state. lang/norm_text ride along only when the near tier needs
     them — the exact-only mode must not drag full document text into the
-    per-batch localCheckpoint."""
-    cols = (
-        ["url", "lang", "norm_text", "fingerprint", "n_tokens"]
-        if with_text
-        else ["url", "fingerprint", "n_tokens"]
+    per-batch localCheckpoint.
+
+    A drop may repeat a url (re-crawls, a writer's retry). Every table and
+    pair join downstream assumes one row per url, so the batch keeps one
+    deterministic row per url here, where untrusted input enters: the
+    minimum of its (fingerprint, ...) structs."""
+    cols = ["fingerprint", "n_tokens"] + (
+        ["lang", "norm_text"] if with_text else []
     )
-    return apply_gates(prepare_columns(batch, cfg), cfg).select(*cols)
+    return (
+        apply_gates(prepare_columns(batch, cfg), cfg)
+        .groupBy("url")
+        .agg(F.min(F.struct(*cols)).alias("_row"))
+        .select("url", *[F.col(f"_row.{c}").alias(c) for c in cols])
+    )
 
 
 def _process_exact_tier(
     fps: DataFrame, catalog: Catalog, cfg: PipelineConfig, batch_id: int
-) -> DataFrame:
-    """Exact tier of one micro-batch: probe + state/dup appends. Returns the
-    batch's CANONICAL docs (with whatever columns ``fps`` carried) — the
-    near tier's input (exact dups are pre-excluded from near candidacy, the
-    streaming analog of the batch tier's J1 representative rule).
+) -> tuple[DataFrame, Callable[[], None]]:
+    """Exact tier of one micro-batch: one probe, then the state/dup appends.
+    Returns the batch's CANONICAL docs (with whatever columns ``fps``
+    carried) — the near tier's input (exact dups are pre-excluded from near
+    candidacy, the streaming analog of the batch tier's J1 representative
+    rule) — and the tier's COMMIT, which the caller runs (possibly
+    concurrently with the other tiers, which read only the canonical docs).
+
+    The probe is materialized once: every batch fp row with the batch's
+    first-seen url for its fp and the fp's prior owner in state. The state
+    append, the dup append and the canonical docs are filters over it, so
+    the state scan and join run once per batch, not once per consumer.
 
     Canonical = first-seen-in-batch AND (absent from exact state OR present
     under the doc's OWN url). The second disjunct is the replay bridge: a
@@ -113,78 +142,56 @@ def _process_exact_tier(
     tier's commits replays with its docs already in stream_fps — dropping
     them here would leave their band/shingle state missing forever, so they
     flow to the near tier, whose own replay detection appends exactly the
-    missing state and nothing else."""
+    missing state and nothing else. The opposite crash (near committed,
+    exact not) replays with an exact probe identical to the first run's, so
+    the same canonical docs reach a near tier whose replay detection finds
+    their committed state and appends none of it again."""
     # one canonical row per fp within the batch (earliest url wins,
     # deterministic ordering)
-    in_batch_first = fps.groupBy("fingerprint").agg(
-        F.min("url").alias("first_url")
-    )
+    first = fps.groupBy("fingerprint").agg(F.min("url").alias("first_url"))
+    probe = fps.join(first, "fingerprint")
     if catalog.exists(STATE_TABLE):
-        # the fp partitions this batch can possibly hit — bounded by
-        # min(|batch distinct fps|, stream_fp_buckets), tiny driver-side
-        batch_buckets = [
-            r[0]
-            for r in in_batch_first.select(
-                _fp_bucket_col(cfg)
-            ).distinct().collect()
-        ]
-        state = pruned_state(catalog, cfg, batch_buckets).select(
-            "fingerprint", F.col("url").alias("state_url")
+        # earliest prior owner per fp (state holds one row per fp; min() is
+        # cheap insurance against partial-commit residue). The semi-join
+        # keeps the aggregate's shuffle batch-sized, not state-sized.
+        owner = (
+            catalog.read(STATE_TABLE)
+            .join(first.select("fingerprint"), "fingerprint", "left_semi")
+            .groupBy("fingerprint")
+            .agg(F.min("url").alias("matched_url"))
         )
-        # earliest prior owner per fp (state holds one row per fp;
-        # min() is cheap insurance against partial-commit residue)
-        state_first = state.groupBy("fingerprint").agg(
-            F.min("state_url").alias("matched_url")
-        )
+        probe = probe.join(owner, "fingerprint", "left")
     else:
-        state_first = None
+        probe = probe.withColumn("matched_url", F.lit(None).cast("string"))
+    probe = probe.localCheckpoint()
 
-    # in-batch dups: same fp, not the batch's first-seen url
-    dups = fps.join(in_batch_first, "fingerprint").filter(
-        F.col("url") != F.col("first_url")
-    ).select("fingerprint", "url", F.col("first_url").alias("matched_url"))
-
-    new_fps = fps.join(in_batch_first, "fingerprint").filter(
-        F.col("url") == F.col("first_url")
-    )
-
-    canonical = new_fps
-    if state_first is not None:
-        # url != matched_url: a batch REPLAYED after a crash (state
-        # append committed, streaming checkpoint not) finds its own
-        # first-seen urls in state — without the filter each would be
-        # recorded as a duplicate of itself
-        with_state = new_fps.join(state_first, "fingerprint", "left")
-        hits = (
-            with_state.filter(
-                F.col("matched_url").isNotNull()
-                & (F.col("url") != F.col("matched_url"))
-            )
-            .select("fingerprint", "url", "matched_url")
-        )
-        dups = dups.unionByName(hits)
-        new_fps = with_state.filter(F.col("matched_url").isNull()).drop(
-            "matched_url"
-        )
-        # canonical keeps the replay-bridge docs (own url in state)
-        canonical = with_state.filter(
-            F.col("matched_url").isNull()
-            | (F.col("url") == F.col("matched_url"))
-        ).drop("matched_url")
-
+    url, matched = F.col("url"), F.col("matched_url")
+    first_seen = url == F.col("first_url")
     batch_col = F.lit(int(batch_id)).alias("batch_id")
-    catalog.append(
-        new_fps.select(
-            "url", "fingerprint", "n_tokens", batch_col, _fp_bucket_col(cfg)
+    state_rows = probe.filter(first_seen & matched.isNull()).select(
+        "url", "fingerprint", "n_tokens", batch_col
+    )
+    # an in-batch dup matches its fp's first-seen url, a first-seen url its
+    # prior owner. url == matched_url is a batch REPLAYED after a crash
+    # (state append committed, streaming checkpoint not) finding its own
+    # first-seen urls in state — not a duplicate of itself.
+    dup_rows = probe.select(
+        "fingerprint",
+        "url",
+        F.when(first_seen, matched).otherwise(F.col("first_url")).alias(
+            "matched_url"
         ),
-        STATE_TABLE,
-        partition_by=["fp_bucket"],
-    )
-    catalog.append(
-        dups.select("fingerprint", "url", "matched_url", batch_col),
-        DUPS_TABLE,
-    )
-    return canonical.drop("fingerprint", "n_tokens")
+        batch_col,
+    ).filter(matched.isNotNull() & (url != matched))
+    canonical = probe.filter(
+        first_seen & (matched.isNull() | (url == matched))
+    ).drop("fingerprint", "n_tokens", "first_url", "matched_url")
+
+    def commit() -> None:
+        catalog.append(state_rows, STATE_TABLE)
+        catalog.append(dup_rows, DUPS_TABLE)
+
+    return canonical, commit
 
 
 def _process_near_tier(
@@ -194,15 +201,14 @@ def _process_near_tier(
     end-to-end (north_rule: recall is measured at identical
     shingle/signature config): shingle -> fused MinHash UDF -> the SAME
     32-band LSH keys as operators/lsh.py, probed against accumulated
-    band-key state with partition pruning, verified by EXACT Jaccard
-    against matched state docs' shingles (reference analog: the near tier
-    grouper.rs:95-220, applied per increment).
+    band-key state, verified by EXACT Jaccard against matched state docs'
+    shingles (reference analog: the near tier grouper.rs:95-220, applied
+    per increment).
 
-    State layout (two tables, both hive/Iceberg-partitioned so per-batch
-    probes prune, never scan the corpus):
-      * stream_bands (url, band_key) partitioned by
-        band_bucket = pmod(xxhash64(band_key), N) — the candidate probe
-        touches only the batch's own band buckets: O(|batch| x bands / N).
+    State layout (two tables; see the module docstring for why only one is
+    partitioned):
+      * stream_bands (url, band_key), flat — the candidate probe joins the
+        batch's band keys against the whole table.
       * stream_sigs (url, lang, shingles) partitioned by
         sig_bucket = pmod(xxhash64(url), N) — the verify step fetches
         shingles for MATCHED state urls only, pruned to their buckets.
@@ -250,13 +256,7 @@ def _process_near_tier(
     near = None
     replayed = None
     if catalog.exists(BANDS_TABLE):
-        buckets = [
-            r[0]
-            for r in batch_bands.select(_band_bucket_col(cfg))
-            .distinct()
-            .collect()
-        ]
-        state_bands = pruned_band_state(catalog, cfg, buckets).select(
+        state_bands = catalog.read(BANDS_TABLE).select(
             F.col("url").alias("state_url"), "band_key"
         )
         # cap probe fan-out: a boilerplate band key owned by a huge slice of
@@ -284,21 +284,11 @@ def _process_near_tier(
             .select("url", F.col("state_url").alias("matched_url"))
             .distinct()
         )
-        m_buckets = [
-            r[0]
-            for r in cross.select(
-                _sig_bucket_col(cfg, "matched_url")
-            ).distinct().collect()
-        ]
-        if m_buckets:
-            state_sigs = (
-                catalog.read(SIGS_TABLE)
-                .filter(F.col("sig_bucket").isin(m_buckets))
-                .dropDuplicates()  # crash-residue insurance (exact-row dups)
-                .select(
-                    F.col("url").alias("matched_url"),
-                    F.col("shingles").alias("m_shingles"),
-                )
+        state_sigs = matched_payload(catalog, cfg, SIGS_TABLE, cross)
+        if state_sigs is not None:
+            state_sigs = state_sigs.select(
+                F.col("url").alias("matched_url"),
+                F.col("shingles").alias("m_shingles"),
             )
             # threshold on the RAW jaccard (rounding only at output) so a
             # borderline pair classifies identically to the batch tier's
@@ -390,17 +380,17 @@ def _process_near_tier(
     to_state = to_state.localCheckpoint()  # sigs + bands appends both read it
     catalog.append(
         to_state.select(
-            "url", "lang", "shingles", batch_col, _sig_bucket_col(cfg)
+            "url", "lang", "shingles", batch_col,
+            _url_bucket_col(cfg, SIGS_TABLE),
         ),
         SIGS_TABLE,
-        partition_by=["sig_bucket"],
+        partition_by=[_PAYLOAD_BUCKETS[SIGS_TABLE]],
     )
     catalog.append(
         to_state.select(
-            "url", F.explode("band_keys").alias("band_key")
-        ).select("url", "band_key", batch_col, _band_bucket_col(cfg)),
+            "url", F.explode("band_keys").alias("band_key"), batch_col
+        ),
         BANDS_TABLE,
-        partition_by=["band_bucket"],
     )
 
 
@@ -413,11 +403,11 @@ def _process_substring_tier(
     winnowing candidate generation + exact rolling-hash LCS verify
     (operators/substring.py) against accumulated fingerprint state.
 
-    State layout (same pmod(hash, N)-bucketed + pruned-probe pattern as the
-    near tier's stream_bands/stream_sigs):
-      * stream_winnow (url, band_key) partitioned by
-        win_bucket = pmod(xxhash64(band_key), N) — winnowed fingerprints
-        (~2% of chars), probed with partition pruning: O(|batch fps| / N).
+    State layout (the near tier's shape: a flat probe table, a url-bucketed
+    payload table):
+      * stream_winnow (url, band_key), flat — winnowed fingerprints (~2% of
+        chars), probed by joining the batch's fingerprints against the
+        whole table.
       * stream_texts (url, lang, norm_text) partitioned by
         text_bucket = pmod(xxhash64(url), N) — the verify step fetches
         norm_text for MATCHED state urls only, pruned to their buckets.
@@ -449,11 +439,7 @@ def _process_substring_tier(
     edges = None
     replayed = None
     if catalog.exists(WINNOW_TABLE):
-        buckets = [
-            r[0]
-            for r in fps.select(_winnow_bucket_col(cfg)).distinct().collect()
-        ]
-        state_fps = pruned_winnow_state(catalog, cfg, buckets).select(
+        state_fps = catalog.read(WINNOW_TABLE).select(
             F.col("url").alias("state_url"), "band_key"
         )
         sizes = state_fps.groupBy("band_key").agg(
@@ -479,18 +465,10 @@ def _process_substring_tier(
             .select("url", F.col("state_url").alias("matched_url"))
             .distinct()
         )
-        m_buckets = [
-            r[0]
-            for r in cross.select(
-                _text_bucket_col(cfg, "matched_url")
-            ).distinct().collect()
-        ]
-        if m_buckets:
+        state_texts = matched_payload(catalog, cfg, TEXTS_TABLE, cross)
+        if state_texts is not None:
             state_texts = (
-                catalog.read(TEXTS_TABLE)
-                .filter(F.col("text_bucket").isin(m_buckets))
-                .dropDuplicates()  # crash-residue insurance
-                .select("url", "norm_text")
+                state_texts.select("url", "norm_text")
                 # a url present in BOTH batch and state (re-sent url) must
                 # contribute ONE text row — the batch's wins
                 .join(eligible.select("url"), "url", "left_anti")
@@ -549,17 +527,17 @@ def _process_substring_tier(
     to_state = to_state.localCheckpoint()
     catalog.append(
         to_state.select(
-            "url", "lang", "norm_text", batch_col, _text_bucket_col(cfg)
+            "url", "lang", "norm_text", batch_col,
+            _url_bucket_col(cfg, TEXTS_TABLE),
         ),
         TEXTS_TABLE,
-        partition_by=["text_bucket"],
+        partition_by=[_PAYLOAD_BUCKETS[TEXTS_TABLE]],
     )
     catalog.append(
         fps.join(to_state.select("url"), "url", "inner").select(
-            "url", "band_key", batch_col, _winnow_bucket_col(cfg)
+            "url", "band_key", batch_col
         ),
         WINNOW_TABLE,
-        partition_by=["win_bucket"],
     )
 
 
@@ -576,13 +554,15 @@ def incremental_dedup(
     Per micro-batch (foreachBatch — the sink is several table appends, not
     expressible as a single streaming sink):
       1. fingerprint the batch with the batch-tier UDFs,
-      2. EXACT tier: probe ``stream_fps`` (partition-pruned), append hits to
-         ``stream_dups`` and first-seen fps to state,
+      2. EXACT tier: probe ``stream_fps``, append hits to ``stream_dups``
+         and first-seen fps to state,
       3. NEAR tier (``tiers`` includes 'near'): the batch's canonical docs
          are MinHash-banded with the batch tier's exact config, probed
          against ``stream_bands``, exact-Jaccard-verified against matched
          docs' shingles from ``stream_sigs``, and appended to
          ``stream_near_dups`` (see ``_process_near_tier``).
+    Step 2's appends run on a driver thread while step 3 (and the
+    substring tier) run; the batch returns only after all of them commit.
 
     With ``available_now`` the query drains everything currently in the
     directory and stops — the deterministic test/backfill mode; without it
@@ -598,25 +578,33 @@ def incremental_dedup(
         raise ValueError(
             "the 'exact' tier is mandatory ('near'/'substring' build on it)"
         )
-    _migrate_legacy_state(catalog, cfg)
+    _flatten_probe_tables(catalog)
     near = "near" in tiers
     substring = "substring" in tiers
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        # localCheckpoint: the fingerprint UDF chain is referenced by four+
-        # downstream plans (first-seen, dups, state probe, bucket collect) —
-        # materialize the batch-sized frame once instead of re-normalizing
-        # the batch per consumer
+        # localCheckpoint: the exact probe reads the fingerprinted batch
+        # three times (first-seen aggregate, its join, the state
+        # semi-join) — materialize the batch-sized frame once instead of
+        # re-normalizing the batch per branch
         fps = _fingerprint_batch(
             batch, cfg, with_text=near or substring
         ).localCheckpoint()
-        new_docs = _process_exact_tier(fps, catalog, cfg, batch_id)
+        new_docs, commit_exact = _process_exact_tier(
+            fps, catalog, cfg, batch_id
+        )
+        if not (near or substring):
+            commit_exact()
+            return
         # near and substring are INDEPENDENT detectors over the same
-        # exact-canonical docs (the batch pipeline's parallel-detector shape)
-        if near:
-            _process_near_tier(new_docs, catalog, cfg, batch_id)
-        if substring:
-            _process_substring_tier(new_docs, catalog, cfg, batch_id)
+        # exact-canonical docs (the batch pipeline's parallel-detector
+        # shape); neither reads the exact tables, so the exact commit
+        # overlaps them
+        with _running_alongside(catalog.spark, commit_exact):
+            if near:
+                _process_near_tier(new_docs, catalog, cfg, batch_id)
+            if substring:
+                _process_substring_tier(new_docs, catalog, cfg, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(_process)
@@ -642,124 +630,125 @@ def incremental_exact_dedup(
     )
 
 
-def _fp_bucket_col(cfg: PipelineConfig):
-    # pmod over a re-hash (not the raw fp) so the SAME expression buckets
-    # 64-bit BIGINT and 128-bit hex-string fingerprints alike
-    return (
-        F.pmod(F.xxhash64("fingerprint"), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("fp_bucket")
-    )
+# Spark keeps job properties per thread: the micro-batch's description
+# ("... batch = <id>") and the query's job group (query.stop() cancels it)
+_BATCH_JOB_PROPERTIES = ("spark.job.description", "spark.jobGroup.id")
 
 
-def _band_bucket_col(cfg: PipelineConfig):
-    return (
-        F.pmod(F.xxhash64("band_key"), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("band_bucket")
-    )
+@contextmanager
+def _running_alongside(spark: SparkSession, fn: Callable[[], None]):
+    """Run ``fn`` on a driver thread while the block runs (Spark schedules
+    concurrently submitted jobs side by side). The thread's jobs carry the
+    calling thread's batch job properties. Exiting joins the thread and
+    re-raises its error, so a failed commit fails the micro-batch."""
+    sc = spark.sparkContext
+    props = {k: sc.getLocalProperty(k) for k in _BATCH_JOB_PROPERTIES}
+    errors: list[BaseException] = []
+
+    def run() -> None:
+        try:
+            for k, v in props.items():
+                sc.setLocalProperty(k, v)
+            fn()
+        except BaseException as exc:  # re-raised on the calling thread
+            errors.append(exc)
+
+    thread = threading.Thread(target=run, name="stream-commit", daemon=True)
+    thread.start()
+    try:
+        yield
+    finally:
+        thread.join()
+    if errors:
+        raise errors[0]
 
 
-def _sig_bucket_col(cfg: PipelineConfig, url_col: str = "url"):
+# url-keyed payload tables and their partition column
+_PAYLOAD_BUCKETS = {SIGS_TABLE: "sig_bucket", TEXTS_TABLE: "text_bucket"}
+# probe tables an earlier revision wrote hive-partitioned, and the column
+_LEGACY_PROBE_BUCKETS = {
+    STATE_TABLE: "fp_bucket",
+    BANDS_TABLE: "band_bucket",
+    WINNOW_TABLE: "win_bucket",
+}
+
+
+def _url_bucket_col(cfg: PipelineConfig, table: str, url_col: str = "url"):
     return (
         F.pmod(F.xxhash64(url_col), F.lit(cfg.stream_fp_buckets))
         .cast("int")
-        .alias("sig_bucket")
+        .alias(_PAYLOAD_BUCKETS[table])
     )
 
 
-def _winnow_bucket_col(cfg: PipelineConfig):
+def matched_payload(
+    catalog: Catalog, cfg: PipelineConfig, table: str, cross: DataFrame
+) -> DataFrame | None:
+    """Rows of a url-keyed payload table (``stream_sigs``/``stream_texts``)
+    for the state urls a batch matched (``cross.matched_url``), or None
+    when it matched none. The buckets of the matched urls — a handful per
+    batch — are collected driver-side, so the isin filter lands as a
+    PartitionFilter on the scan (hive layout under the parquet fallback,
+    identity partition spec under Iceberg) and every other bucket's files
+    are never opened. The full-row dropDuplicates collapses crash residue
+    (exact-row duplicates, see ``_process_near_tier``)."""
+    bucket = _PAYLOAD_BUCKETS[table]
+    buckets = [
+        r[0]
+        for r in cross.select(_url_bucket_col(cfg, table, "matched_url"))
+        .distinct()
+        .collect()
+    ]
+    if not buckets:
+        return None
     return (
-        F.pmod(F.xxhash64("band_key"), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("win_bucket")
+        catalog.read(table).filter(F.col(bucket).isin(buckets)).dropDuplicates()
     )
 
 
-def _text_bucket_col(cfg: PipelineConfig, url_col: str = "url"):
-    return (
-        F.pmod(F.xxhash64(url_col), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("text_bucket")
-    )
+def _flatten_probe_tables(catalog: Catalog) -> None:
+    """Rewrite probe tables that an earlier revision wrote hive-partitioned
+    (``<root>/<bucket>=N/*.parquet``) into the flat layout appends now
+    use. Runs at stream start; a flat table is left as it is.
 
-
-def pruned_state(
-    catalog: Catalog, cfg: PipelineConfig, buckets: list[int]
-) -> DataFrame:
-    """State rows living in the given fp_bucket partitions — the isin filter
-    lands as a PartitionFilter on the scan (hive layout under the parquet
-    fallback, identity partition spec under Iceberg), so every other
-    partition's files are never opened. This is what keeps the per-batch
-    probe O(|batch's buckets| / N of state) instead of O(state)."""
-    return catalog.read(STATE_TABLE).filter(
-        F.col("fp_bucket").isin([int(b) for b in buckets])
-    )
-
-
-def pruned_band_state(
-    catalog: Catalog, cfg: PipelineConfig, buckets: list[int]
-) -> DataFrame:
-    """Band-key state rows in the given band_bucket partitions — the near
-    tier's partition-pruned probe (same contract as ``pruned_state``)."""
-    return catalog.read(BANDS_TABLE).filter(
-        F.col("band_bucket").isin([int(b) for b in buckets])
-    )
-
-
-def pruned_winnow_state(
-    catalog: Catalog, cfg: PipelineConfig, buckets: list[int]
-) -> DataFrame:
-    """Winnow-fingerprint state rows in the given win_bucket partitions —
-    the substring tier's partition-pruned probe (same contract as
-    ``pruned_state``)."""
-    return catalog.read(WINNOW_TABLE).filter(
-        F.col("win_bucket").isin([int(b) for b in buckets])
-    )
-
-
-def _migrate_legacy_state(catalog: Catalog, cfg: PipelineConfig) -> None:
-    """One-time layout migration (ADVICE r3): a warehouse written by the
-    pre-partitioned revision holds FLAT part-files (no fp_bucket column)
-    in the stream_fps root; new appends land under fp_bucket= dirs, and
-    Spark refuses the resulting mixed-depth listing. On stream start, any
-    flat legacy files are rewritten into the partitioned layout (bucket
-    derived from the fingerprint) and removed.
-
-    Crash-ordering: tmp write -> move into partition dirs -> unlink legacy.
-    A crash mid-sequence leaves the legacy files in place, so the next
-    start re-migrates; the only residue is exact-row duplicate state rows,
-    which every reader already collapses (full-row dropDuplicates /
-    min-per-fp probe). Iceberg mode never hits this (schema evolution)."""
-    if catalog.iceberg or not catalog.exists(STATE_TABLE):
+    Spark cannot list a root holding both flat part-files and partition
+    directories, so the root is swapped whole, never edited in place:
+      1. hard-link every part-file into ``<root>__flat`` (its bucket
+         directory prefixed to the name: Spark repeats file names across
+         the buckets of one write). Hive layouts keep the bucket column in
+         the path, not in the files, so no data is rewritten;
+      2. rename ``<root>`` to ``<root>__bucketed``;
+      3. rename ``<root>__flat`` to ``<root>``;
+      4. delete ``<root>__bucketed``.
+    A crash anywhere is repaired by the next start: ``<root>__bucketed``
+    exists only once step 1 finished, so step 3 is completed from it if
+    needed and the old tree removed; a ``<root>__flat`` without it is an
+    unfinished step 1 and is rebuilt from scratch. Iceberg tables are left
+    alone: Iceberg evolves a partition spec in place."""
+    if catalog.iceberg:  # pragma: no cover - exercised only with the jar
         return
-    root = catalog._path(STATE_TABLE)
-    # clean tmp orphans from a previous crashed migration
-    for orphan in root.parent.glob(f"{STATE_TABLE}__migrate_*"):
-        shutil.rmtree(orphan, ignore_errors=True)
-    legacy = sorted(str(p) for p in root.glob("*.parquet"))
-    if not legacy:
-        return
-    spark = catalog.spark
-    old = spark.read.parquet(*legacy)
-    if "fp_bucket" not in old.columns:
-        old = old.select(
-            "url", "fingerprint", "n_tokens", "batch_id", _fp_bucket_col(cfg)
-        )
-    tmp = root.parent / f"{STATE_TABLE}__migrate_{uuid.uuid4().hex[:8]}"
-    old.write.partitionBy("fp_bucket").parquet(str(tmp))
-    for bucket_dir in tmp.glob("fp_bucket=*"):
-        dest = root / bucket_dir.name
-        dest.mkdir(exist_ok=True)
-        for pf in bucket_dir.glob("*.parquet"):
-            shutil.move(str(pf), str(dest / pf.name))
-    for p in legacy:
-        (root / p.split("/")[-1]).unlink(missing_ok=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+    for name, bucket in _LEGACY_PROBE_BUCKETS.items():
+        root = catalog._path(name)
+        staged = root.with_name(f"{name}__flat")
+        retired = root.with_name(f"{name}__bucketed")
+        if retired.exists():
+            if not root.exists():
+                staged.rename(root)
+            shutil.rmtree(retired)
+        shutil.rmtree(staged, ignore_errors=True)
+        parts = sorted(root.glob(f"{bucket}=*/*.parquet"))
+        if not parts:
+            continue
+        staged.mkdir()
+        for part in parts:
+            os.link(part, staged / f"{part.parent.name}-{part.name}")
+        root.rename(retired)
+        staged.rename(root)
+        shutil.rmtree(retired)
 
 
 def load_stream_state(catalog: Catalog) -> DataFrame:
-    """Accumulated (url, fingerprint, n_tokens, batch_id, fp_bucket) state.
+    """Accumulated (url, fingerprint, n_tokens, batch_id) state.
 
     Replays re-append NOTHING (the probe anti-join sees the first commit's
     rows — module docstring), so this is a plain read; the full-row

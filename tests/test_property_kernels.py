@@ -136,9 +136,28 @@ def _dp_lcs(a: str, b: str) -> tuple[int, int, int]:
 text = st.text(alphabet="abcdé x", max_size=60)
 
 
-@settings(max_examples=80, deadline=None)
-@given(text, text, st.integers(min_value=1, max_value=5))
-def test_lcs_span_matches_dp_oracle(a, b, min_len):
+@st.composite
+def lcs_inputs(draw):
+    """(a, b, min_len): two random texts, half the time with one long span
+    planted at random offsets in both — the shape real substring
+    candidates have, where the kernel's greedy extension and lo+1 probes
+    decide the search (random texts over a 7-letter alphabet add short
+    competing runs, some nested inside the span)."""
+    a, b = draw(text), draw(text)
+    min_len = draw(st.integers(min_value=1, max_value=5))
+    if draw(st.booleans()):
+        span = draw(st.text(alphabet="abcdé x", min_size=8, max_size=150))
+        i = draw(st.integers(min_value=0, max_value=len(a)))
+        j = draw(st.integers(min_value=0, max_value=len(b)))
+        a, b = a[:i] + span + a[i:], b[:j] + span + b[j:]
+        min_len = draw(st.integers(min_value=1, max_value=len(span) + 2))
+    return a, b, min_len
+
+
+@settings(max_examples=120, deadline=None)
+@given(lcs_inputs())
+def test_lcs_span_matches_dp_oracle(case):
+    a, b, min_len = case
     exp_len, exp_pa, exp_pb = _dp_lcs(a, b)
     if exp_len < min_len:
         exp = (0, 0, 0)
@@ -149,8 +168,9 @@ def test_lcs_span_matches_dp_oracle(a, b, min_len):
 
 
 @settings(max_examples=40, deadline=None)
-@given(text, text, st.integers(min_value=1, max_value=5))
-def test_lcs_length_is_symmetric(a, b, min_len):
+@given(lcs_inputs())
+def test_lcs_length_is_symmetric(case):
+    a, b, min_len = case
     assert longest_common_substring_len(
         a, b, min_len
     ) == longest_common_substring_len(b, a, min_len)

@@ -6,6 +6,7 @@ ingest stats."""
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 
 import pytest
 
@@ -109,28 +110,6 @@ def test_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert state2 == state1
     assert dups2 == dups1
     assert all(u != m for u, m in dups2)
-
-
-def test_state_probe_prunes_partitions(spark, stream_env):
-    """The state probe must read only the fp_bucket partitions the batch
-    can hit: the isin filter lands as a PartitionFilter on the parquet scan
-    (the VERDICT's plan assertion) and the scan's file set is confined to
-    the probed bucket directories."""
-    from cargo_dupes_spark.streaming.incremental import pruned_state
-
-    cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
-    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
-
-    buckets = sorted({r.fp_bucket for r in load_stream_state(catalog).collect()})
-    assert len(buckets) == 2  # two distinct fps in wave 1
-    probe = pruned_state(catalog, cfg, buckets[:1])
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    parts = plan.split("PartitionFilters:", 1)
-    assert len(parts) == 2 and "fp_bucket" in parts[1][:300], plan
-    # and the pruned read returns exactly the probed bucket's rows
-    got = {r.fp_bucket for r in probe.collect()}
-    assert got == set(buckets[:1])
 
 
 def test_cli_stream_subcommand(spark, stream_env, tmp_path):
@@ -282,39 +261,15 @@ def test_near_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert all(u != m for u, m in near2)
 
 
-def test_near_probe_prunes_partitions(spark, stream_env):
-    """The band-key probe must land as a PartitionFilter on band_bucket —
-    the near-tier twin of the exact tier's plan assertion."""
-    from cargo_dupes_spark.streaming.incremental import (
-        BANDS_TABLE,
-        pruned_band_state,
-    )
-
-    cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, NEAR_WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
-    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
-
-    buckets = sorted(
-        {r.band_bucket for r in catalog.read(BANDS_TABLE).collect()}
-    )
-    assert buckets
-    probe = pruned_band_state(catalog, cfg, buckets[:1])
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    parts = plan.split("PartitionFilters:", 1)
-    assert len(parts) == 2 and "band_bucket" in parts[1][:300], plan
-    assert {r.band_bucket for r in probe.collect()} == set(buckets[:1])
-
-
-def test_legacy_flat_state_migrates(spark, stream_env, tmp_path):
-    """A warehouse written by the pre-partitioned revision (flat part-files,
-    no fp_bucket column) must migrate to the partitioned layout on stream
-    start and keep detecting cross-wave dups (ADVICE r3)."""
+def test_legacy_flat_state_resumes_as_is(spark, stream_env, tmp_path):
+    """A warehouse whose stream_fps is flat part-files without any bucket
+    column (the oldest layout, and the current one) resumes untouched and
+    keeps detecting cross-wave dups."""
     cfg, catalog, drop_dir, ckpt = stream_env
     _pages(spark, WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
     _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
 
-    # forge the legacy layout in a fresh warehouse: same rows, flat files,
-    # no fp_bucket column
+    # the same rows, written by hand as one flat file in a fresh warehouse
     legacy_rows = load_stream_state(catalog).select(
         "url", "fingerprint", "n_tokens", "batch_id"
     )
@@ -322,7 +277,8 @@ def test_legacy_flat_state_migrates(spark, stream_env, tmp_path):
     catalog2 = Catalog(spark, str(wh2), cfg.config_hash())
     legacy_rows.coalesce(1).write.parquet(str(wh2 / "stream_fps"))
     root = wh2 / "stream_fps"
-    assert list(root.glob("*.parquet"))  # flat layout in place
+    legacy_files = sorted(p.name for p in root.glob("*.parquet"))
+    assert legacy_files
 
     drops2 = tmp_path / "drops2"
     drops2.mkdir()
@@ -331,16 +287,16 @@ def test_legacy_flat_state_migrates(spark, stream_env, tmp_path):
         read_web_pages_stream(spark, str(drops2)), catalog2, cfg,
         str(tmp_path / "ckpt_legacy"),
     )
-    # migrated: no flat files left, bucket dirs present, probe still works
-    assert not list(root.glob("*.parquet"))
-    assert list(root.glob("fp_bucket=*"))
+    # the legacy files are still there, next to the new flat appends
+    assert set(legacy_files) <= {p.name for p in root.glob("*.parquet")}
+    assert not [p for p in root.iterdir() if p.is_dir()]
     dups = {
         (r.url, r.matched_url) for r in load_stream_dups(catalog2).collect()
     }
     assert ("http://b.example/9", "http://a.example/1") in dups
     state = load_stream_state(catalog2)
-    assert "fp_bucket" in state.columns
-    assert state.count() == 3  # 2 migrated + 1 new, no duplicates
+    assert state.columns == ["url", "fingerprint", "n_tokens", "batch_id"]
+    assert state.count() == 3  # 2 legacy + 1 new, no duplicates
 
 
 def test_near_state_recovers_after_partial_crash(spark, stream_env, tmp_path):
@@ -539,17 +495,287 @@ def test_substring_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert all(u != m for u, m in dups2)
 
 
-def test_winnow_probe_prunes_partitions(spark, stream_env):
-    """The fingerprint probe must land as a PartitionFilter on win_bucket —
-    the substring-tier twin of the exact/near plan assertions."""
+# ---------------------------------------------------------------------------
+# state layout: flat probe tables, url-bucketed payload tables
+# ---------------------------------------------------------------------------
+def _drain_tiers(stream_df, catalog, cfg, ckpt, tiers):
+    from cargo_dupes_spark.streaming.incremental import incremental_dedup
+
+    q = incremental_dedup(stream_df, catalog, cfg, ckpt, tiers=tiers)
+    q.awaitTermination(180)
+    assert not q.isActive
+
+
+def _rows(catalog, table, *cols):
+    return {tuple(r) for r in catalog.read(table).select(*cols).collect()}
+
+
+def test_probe_appends_one_file_per_writer_task(spark, stream_env):
+    """Each trigger adds at most one part-file per writer task to each
+    probe table, straight under the table root (a hash-bucketed layout
+    wrote one file per bucket per task)."""
     from cargo_dupes_spark.streaming.incremental import (
+        BANDS_TABLE,
+        STATE_TABLE,
         WINNOW_TABLE,
-        pruned_winnow_state,
     )
 
     cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, SUB_WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
-    _drain_substr(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
-    assert catalog.exists(WINNOW_TABLE)
-    plan = pruned_winnow_state(catalog, cfg, [0, 1])._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "win_bucket" in plan
+    probes = (STATE_TABLE, BANDS_TABLE, WINNOW_TABLE)
+    tasks = {}
+    real_append = catalog.append
+
+    def counting_append(df, name, partition_by=None):
+        real_append(df, name, partition_by)
+        if name in probes:
+            tasks[name] = tasks.get(name, 0) + df.rdd.getNumPartitions()
+
+    catalog.append = counting_append
+    tiers = ("exact", "near", "substring")
+    files = {}
+    for wave in (NEAR_WAVE1 + SUB_WAVE1, NEAR_WAVE2 + SUB_WAVE2):
+        tasks.clear()
+        _pages(spark, wave).coalesce(1).write.mode("append").parquet(drop_dir)
+        _drain_tiers(
+            read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt, tiers
+        )
+        for name in probes:
+            root = catalog._path(name)
+            assert not [p for p in root.iterdir() if p.is_dir()], name
+            now = len(list(root.glob("*.parquet")))
+            assert 0 < now - files.get(name, 0) <= tasks[name], name
+            files[name] = now
+
+
+def test_sigs_fetch_prunes_partitions(spark, stream_env):
+    """The pruning that remains: fetching shingles for matched state urls
+    lands as a PartitionFilter on sig_bucket and returns only those
+    buckets' rows."""
+    from pyspark.sql import functions as F
+
+    from cargo_dupes_spark.streaming.incremental import (
+        SIGS_TABLE,
+        matched_payload,
+    )
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, NEAR_WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+
+    cross = spark.createDataFrame(
+        [("http://o.example/9", "http://n.example/1")], "url string, matched_url string"
+    )
+    fetch = matched_payload(catalog, cfg, SIGS_TABLE, cross)
+    plan = fetch._jdf.queryExecution().executedPlan().toString()
+    parts = plan.split("PartitionFilters:", 1)
+    assert len(parts) == 2 and "sig_bucket" in parts[1][:300], plan
+    bucket = (
+        catalog.read(SIGS_TABLE)
+        .filter(F.col("url") == "http://n.example/1")
+        .first()
+        .sig_bucket
+    )
+    got = fetch.collect()
+    assert {r.sig_bucket for r in got} == {bucket}
+    assert "http://n.example/1" in {r.url for r in got}
+    assert matched_payload(catalog, cfg, SIGS_TABLE, cross.limit(0)) is None
+
+
+EXACT_NEAR_WAVE1 = NEAR_WAVE1 + [
+    # byte-identical to /1 -> in-batch exact dup
+    ("http://n.example/4", TS, _LONG, "en"),
+]
+
+
+def test_crash_before_exact_commit_replays_clean(
+    spark, stream_env, tmp_path
+):
+    """The exact commit overlaps the near tier, so a batch can crash with
+    its near state committed and its exact state not. Replaying it must
+    leave the same exact, dup and near tables as a clean run. The failed
+    commit also shows that the commit thread's jobs carry the batch's job
+    description."""
+    from cargo_dupes_spark.streaming.incremental import (
+        BANDS_TABLE,
+        NEAR_DUPS_TABLE,
+        SIGS_TABLE,
+        STATE_TABLE,
+        incremental_dedup,
+        load_stream_near_dups,
+    )
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, EXACT_NEAR_WAVE1).coalesce(1).write.mode("append").parquet(
+        drop_dir
+    )
+    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+
+    def tables(cat):
+        return (
+            _rows(cat, STATE_TABLE, "url", "fingerprint"),
+            {(r.url, r.matched_url) for r in load_stream_dups(cat).collect()},
+            {
+                (r.url, r.matched_url, r.similarity)
+                for r in load_stream_near_dups(cat).collect()
+            },
+            _rows(cat, SIGS_TABLE, "url"),
+            _rows(cat, BANDS_TABLE, "url", "band_key"),
+        )
+
+    clean = tables(catalog)
+    assert clean[1] == {("http://n.example/4", "http://n.example/1")}
+
+    wh2 = tmp_path / "wh_crash"
+    crashed = Catalog(spark, str(wh2), cfg.config_hash())
+    ckpt2 = str(tmp_path / "ckpt_crash")
+    real_append = crashed.append
+    descriptions = []
+
+    def crash_on_exact(df, name, partition_by=None):
+        if name == STATE_TABLE:
+            descriptions.append(
+                spark.sparkContext.getLocalProperty("spark.job.description")
+            )
+            raise RuntimeError("simulated crash before the exact commit")
+        real_append(df, name, partition_by)
+
+    crashed.append = crash_on_exact
+    q = incremental_dedup(
+        read_web_pages_stream(spark, drop_dir), crashed, cfg, ckpt2,
+        tiers=("exact", "near"),
+    )
+    with pytest.raises(Exception, match="simulated crash"):
+        q.awaitTermination(180)
+    assert descriptions and "batch = 0" in descriptions[0]
+    assert crashed.exists(NEAR_DUPS_TABLE) and crashed.exists(BANDS_TABLE)
+    assert not crashed.exists(STATE_TABLE)
+
+    crashed.append = real_append
+    _drain_near(read_web_pages_stream(spark, drop_dir), crashed, cfg, ckpt2)
+    assert tables(crashed) == clean
+
+
+def _forge_bucketed(spark, src: Catalog, dst, table, key, bucket):
+    """Write ``table`` the way the bucketed revision did: hive-partitioned
+    by pmod(xxhash64(key), 64), the bucket column only in the path."""
+    from pyspark.sql import functions as F
+
+    src.read(table).withColumn(
+        bucket, F.pmod(F.xxhash64(key), F.lit(64)).cast("int")
+    ).write.partitionBy(bucket).parquet(str(dst / table))
+
+
+def test_bucketed_probe_tables_flatten_on_resume(
+    spark, stream_env, tmp_path, monkeypatch
+):
+    """A warehouse with hash-bucketed probe tables (the previous layout) is
+    rewritten flat at stream start and keeps detecting cross-wave exact and
+    near dups — also when the rewrite crashed between its renames, leaving
+    a table root missing."""
+    from pathlib import Path
+
+    from cargo_dupes_spark.streaming.incremental import (
+        BANDS_TABLE,
+        DUPS_TABLE,
+        NEAR_DUPS_TABLE,
+        SIGS_TABLE,
+        STATE_TABLE,
+        incremental_dedup,
+        load_stream_near_dups,
+    )
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, WAVE1 + NEAR_WAVE1).coalesce(1).write.mode("append").parquet(
+        drop_dir
+    )
+    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+
+    wh2 = tmp_path / "wh_bucketed"
+    old = Catalog(spark, str(wh2), cfg.config_hash())
+    _forge_bucketed(spark, catalog, wh2, STATE_TABLE, "fingerprint", "fp_bucket")
+    _forge_bucketed(spark, catalog, wh2, BANDS_TABLE, "band_key", "band_bucket")
+    for table in (SIGS_TABLE, DUPS_TABLE, NEAR_DUPS_TABLE):
+        shutil.copytree(catalog._path(table), wh2 / table)
+    state_before = _rows(old, STATE_TABLE, "url", "fingerprint")
+    bands_before = _rows(old, BANDS_TABLE, "url", "band_key")
+    assert list((wh2 / BANDS_TABLE).glob("band_bucket=*"))
+
+    drops2 = tmp_path / "drops2"
+    drops2.mkdir()
+    _pages(spark, WAVE2 + NEAR_WAVE2).coalesce(1).write.mode("append").parquet(
+        str(drops2)
+    )
+    stream2 = read_web_pages_stream(spark, str(drops2))
+    ckpt2 = str(tmp_path / "ckpt_bucketed")
+
+    # crash between the rewrite's renames: stream_bands is parked under
+    # its __bucketed name and its flat copy is not in place yet
+    real_rename = Path.rename
+
+    def crash_on_bands(self, target):
+        if Path(target).name == BANDS_TABLE:
+            raise OSError("simulated crash")
+        return real_rename(self, target)
+
+    monkeypatch.setattr(Path, "rename", crash_on_bands)
+    with pytest.raises(OSError, match="simulated crash"):
+        incremental_dedup(stream2, old, cfg, ckpt2, tiers=("exact", "near"))
+    monkeypatch.undo()
+    assert not (wh2 / BANDS_TABLE).exists()
+    assert (wh2 / f"{BANDS_TABLE}__bucketed").is_dir()
+
+    _drain_near(stream2, old, cfg, ckpt2)
+    leftovers = [p.name for p in wh2.iterdir() if "__" in p.name]
+    assert not leftovers
+    for table in (STATE_TABLE, BANDS_TABLE):
+        root = wh2 / table
+        assert not [p for p in root.iterdir() if p.is_dir()], table
+    # the flattened rows are the bucketed rows, and the wave-2 rows joined
+    assert state_before < _rows(old, STATE_TABLE, "url", "fingerprint")
+    assert bands_before < _rows(old, BANDS_TABLE, "url", "band_key")
+    dups = {(r.url, r.matched_url) for r in load_stream_dups(old).collect()}
+    assert ("http://b.example/9", "http://a.example/1") in dups
+    near = {
+        (r.url, r.matched_url) for r in load_stream_near_dups(old).collect()
+    }
+    assert ("http://o.example/9", "http://n.example/1") in near
+
+
+def test_repeated_url_in_drop_keeps_one_row(spark, stream_env):
+    """A drop that repeats a url — once with the same text, once with a
+    different one — enters state once per url and yields no duplicate or
+    self pairs on the near and substring tiers."""
+    from cargo_dupes_spark.streaming.incremental import (
+        NEAR_DUPS_TABLE,
+        SIGS_TABLE,
+        STATE_TABLE,
+        SUBSTR_DUPS_TABLE,
+        TEXTS_TABLE,
+    )
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    rows = [
+        ("http://r.example/1", TS, _LONG, "en"),
+        ("http://r.example/1", TS, _LONG, "en"),
+        ("http://r.example/2", TS, _LONG_EDITED, "en"),
+        ("http://r.example/2", TS, _LONG_EDITED2, "en"),
+        ("http://r.example/3", TS, _BASE_TEXT, "en"),
+        ("http://r.example/3", TS, _BASE_TEXT + " extra suffix words", "en"),
+        ("http://r.example/4", TS, "fresh preamble words " + _BASE_TEXT, "en"),
+    ]
+    _pages(spark, rows).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain_tiers(
+        read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt,
+        ("exact", "near", "substring"),
+    )
+    for table in (STATE_TABLE, SIGS_TABLE, TEXTS_TABLE):
+        urls = [r.url for r in catalog.read(table).collect()]
+        assert len(urls) == len(set(urls)), (table, urls)
+    for table in (NEAR_DUPS_TABLE, SUBSTR_DUPS_TABLE):
+        pairs = [(r.url, r.matched_url) for r in catalog.read(table).collect()]
+        assert len(pairs) == len(set(pairs)), (table, pairs)
+        assert all(u != m for u, m in pairs), (table, pairs)
+    near = _rows(catalog, NEAR_DUPS_TABLE, "url", "matched_url")
+    assert ("http://r.example/2", "http://r.example/1") in near
+    substr = _rows(catalog, SUBSTR_DUPS_TABLE, "url", "matched_url")
+    assert ("http://r.example/4", "http://r.example/3") in substr

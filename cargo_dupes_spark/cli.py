@@ -5,8 +5,8 @@ Mirrors the reference CLI surface (``cargo-dupes/src/main.rs:60-87``,
 ``dupes-core/src/cli.rs:234-440``): `report` is the flagship path, `check`
 the CI gate with exit codes 0/1/2, `ignore`/`ignored`/`cleanup` manage the
 ignore table. Ships to a cluster as
-``spark-submit --py-files dist/cargo_dupes_spark.zip -m cargo_dupes_spark.cli``
-(packaging: `python -m cargo_dupes_spark.package`).
+``spark-submit --py-files dist/pipeline.zip main.py <subcommand>``
+(``scripts/package.sh`` builds ``dist/pipeline.zip``).
 
 Input selection: --input is a parquet path/dir with web_pages columns, or
 'fixtures' (the seeded synthetic corpus), or 'documents:<sf_dir>' for the

@@ -1,9 +1,10 @@
-"""Opt-in runtime contract checks for the single-shuffle reassembly shapes.
+"""Opt-in runtime contract checks for the single-shuffle reassembly.
 
-The one-exchange verify/re-rank restructures (operators/verify.py,
-operators/substring.py ``verify_substring_pairs``, operators/similarity.py
-``_pair_vectors``) rely on the payload side being ONE ROW PER ID: the
-side-masked ``first(ignorenulls=True)`` reassembly is deterministic only
+Every verify/re-rank step attaches pair payloads through ONE helper,
+``operators/verify.py`` ``reassemble_pairs`` (called by ``verify_pairs``,
+``verify_substring_pairs``, ``_pair_vectors`` and, through the first two,
+the streaming tiers). It relies on the payload side being ONE ROW PER ID:
+the side-masked ``first(ignorenulls=True)`` reassembly is deterministic only
 then. A duplicate id silently collapses to one arbitrary row, where the old
 two-aliased-joins shape would have fanned the pair out visibly (ADVICE r4).
 The pipeline's own tables satisfy the contract by construction (signatures
@@ -12,9 +13,9 @@ one-row-per-vec_id); the exposure is PUBLIC callers handing in their own
 frames — lsh_topk / ivf_topk / embedding_near_dup_pairs / verify_* — where a
 violation produces nondeterministic output with no error.
 
-Set ``CARGO_DUPES_DEBUG_CONTRACTS=1`` to make every reassembly site assert
-uniqueness before building its plan: one aggregate job over the id column
-alone (column-pruned — the payload bytes never move), raising ``ValueError``
+Set ``CARGO_DUPES_DEBUG_CONTRACTS=1`` to make the helper assert uniqueness
+before building its plan: one aggregate job over the id column alone
+(column-pruned — the payload bytes never move), raising ``ValueError``
 naming the site and the duplicate count. Off by default: an extra scan per
 call is the wrong default at 100 TB, and in-contract pipelines pay nothing.
 """

@@ -8,8 +8,8 @@ algorithm of Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SOCC'14): each round is two groupBy-min + join passes over the edge list,
 converging in O(log n) rounds to star graphs whose centers are the
 component minima. Execution is HYBRID: edge sets at or below
-DRIVER_CC_THRESHOLD solve with a driver-side union-find (identical labels,
-one collect instead of log n shuffle rounds — per-round job latency is
+DRIVER_CC_THRESHOLD solve on the driver (``_numpy_components``; identical
+labels, one collect instead of log n shuffle rounds — per-round job latency is
 pure fixed cost on small inputs); larger sets run the distributed loop.
 Both paths are pinned against each other and a union-find oracle in
 tests/test_cc.py.
@@ -93,39 +93,12 @@ def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(pairs: list[tuple]) -> dict:
-    """Union-find with min-id roots + path compression — node -> min id of
-    its component. The same structure as the reference's in-RAM grouper
-    (grouper.rs:277-290). Kept as the oracle/reference implementation
-    (tests/test_cc.py pins the numpy path against it); the hybrid hot path
-    uses ``_numpy_components`` below."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union-by-min keeps every root the component minimum
-            parent[max(ra, rb)] = min(ra, rb)
-    nodes = set()
-    for a, b in pairs:
-        nodes.add(a)
-        nodes.add(b)
-    return {n: find(n) for n in nodes}
-
-
 def _numpy_components(a: "np.ndarray", b: "np.ndarray"):
     """Edge endpoint arrays -> (nodes, min-id component label per node),
     fully vectorized: min-label scatter over edges + pointer jumping until
     a fixed point. Labels are indices into the SORTED unique-node array, so
-    the minimum index is the minimum id — same contract as the union-find.
+    the minimum index is the minimum id — the contract of a min-root
+    union-find (the oracle in tests/test_cc.py).
 
     Replaces the per-edge Python union-find on the hybrid driver path
     (ADVICE r3: 1M collected Rows + a dict of Python ints is hundreds of MB
@@ -169,7 +142,7 @@ def connected_components_ids(
     HYBRID execution: the distinct canonical edge count comes free with the
     first convergence fingerprint; at or below ``driver_threshold`` edges
     (~16 MB at 1M BIGINT pairs) the component labels are computed with a
-    driver-side union-find — identical output, ONE collect instead of
+    driver-side numpy kernel — identical output, ONE collect instead of
     O(log n) rounds of shuffle jobs whose fixed per-job latency dominates
     small inputs (a measured strong-scaling limiter). Above the threshold
     the distributed large-star/small-star loop runs unchanged; the collect

@@ -239,18 +239,25 @@ def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
         # minima, which IS cluster_min — identical output, one Arrow
         # collect. The 128-bit variant below keeps the full operator path
         # (its purpose is pinning string-id CC end-to-end), and tests pin
-        # this shortcut against it.
-        from .connected_components import DRIVER_CC_THRESHOLD, _numpy_components
+        # this shortcut against it. The collect is bounded BEFORE it runs:
+        # at most threshold + 1 edges reach the driver, and a full result
+        # means the edge set is oversized.
+        from . import connected_components as cc
 
+        threshold = cc.DRIVER_CC_THRESHOLD
         edges = verify_pairs(pairs, sigs, CFG)
-        pdf = edges.select(
-            F.col("url_a").cast("long").alias("a"),
-            F.col("url_b").cast("long").alias("b"),
-        ).toPandas()
-        if len(pdf) <= DRIVER_CC_THRESHOLD:
+        pdf = (
+            edges.select(
+                F.col("url_a").cast("long").alias("a"),
+                F.col("url_b").cast("long").alias("b"),
+            )
+            .limit(threshold + 1)
+            .toPandas()
+        )
+        if len(pdf) <= threshold:
             import pandas as pd
 
-            nodes, comps = _numpy_components(
+            nodes, comps = cc._numpy_components(
                 pdf["a"].to_numpy(), pdf["b"].to_numpy()
             )
             out = pd.DataFrame({"doc_id": nodes, "cluster_min": comps})

@@ -6,7 +6,9 @@ vec_id BIGINT, embedding ARRAY<FLOAT>, label INT). The brute-force path is
 the exactness baseline (and the DuckDB-oracle-checkable one); the
 random-hyperplane LSH path is the 100 TB shape: candidates only meet inside
 buckets, turning the O(n²) cross join into per-bucket self-joins — the same
-bucket-then-verify skeleton as the near-dup tier.
+bucket-then-verify skeleton as the near-dup tier. The exact cosine re-rank
+attaches both vectors of each candidate pair through the near tier's own
+``verify.reassemble_pairs`` (``_pair_vectors``).
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..contracts import assert_unique_ids
+from .verify import reassemble_pairs
 
 
 def cosine_col(a: Column | str, b: Column | str) -> Column:
@@ -163,62 +165,38 @@ def _pair_vectors(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(nid_a, nid_b) -> (nid_a, nid_b, va, vb) shuffling the vector payload
-    ONCE — the verify_pairs restructure (operators/verify.py) applied to the
-    ANN re-rank: pairs explode to light (pair, nid, side) rows, ONE inner
-    join pulls vectors (single scan + single exchange of the embeddings
-    table instead of the previous two aliased joins), and a groupBy on the
-    pair key reassembles both sides. The only exchange carrying vectors is
-    sized by the candidate set (pairs << corpus at scale), not the corpus.
+    """(nid_a, nid_b) -> (nid_a, nid_b, v_a, v_b) shuffling the vector payload
+    ONCE through verify.reassemble_pairs — the verify_pairs restructure
+    applied to the ANN re-rank: ONE inner join pulls vectors (single scan +
+    single exchange of the embeddings table instead of the previous two
+    aliased joins), and the only exchange carrying vectors is sized by the
+    candidate set (pairs << corpus at scale), not the corpus. The join keys
+    on xxhash64(vec_id) like every other reassembly, with the id equality
+    filter guarding collisions. The reassembly width is pinned: the cosine
+    re-rank downstream is CPU-dense and AQE's byte-based coalescing
+    serializes it onto 1-3 tasks at bench scale.
 
-    ids are the caller's vec_id (unique per row by table contract), so the
-    side-masked first() is deterministic; a pair with either id absent from
-    ``embeddings`` drops (inner-join semantics, same as the old shape).
+    A pair with either id absent from ``embeddings`` drops (inner-join
+    semantics, same as the old shape).
 
     CONTRACT (ADVICE r4): ``embeddings`` must be one-row-per-id. A duplicate
     id silently collapses to ONE arbitrary vector here (first() over the
     merged group), where a two-join shape would have fanned the pair out
     visibly — callers (lsh_topk / ivf_topk / embedding_near_dup_pairs /
     verify shapes) inherit this. A row whose ``vec_col`` is NULL likewise
-    drops at the isNotNull filter (the old inner-join shape kept it with a
-    NULL cosine that fell out of ranking); null vectors are out of contract
-    for every public caller in this module.
+    drops (the old inner-join shape kept it with a NULL cosine that fell
+    out of ranking); null vectors are out of contract for every public
+    caller in this module.
 
     Set CARGO_DUPES_DEBUG_CONTRACTS=1 to assert the contract per call
     (one id-only aggregate; see cargo_dupes_spark/contracts.py)."""
-    assert_unique_ids(embeddings, id_col, "_pair_vectors(embeddings)")
-    exploded = nid_pairs.select(
-        "nid_a",
-        "nid_b",
-        F.explode(
-            F.array(
-                F.struct(F.col("nid_a").alias("nid"), F.lit("a").alias("side")),
-                F.struct(F.col("nid_b").alias("nid"), F.lit("b").alias("side")),
-            )
-        ).alias("_e"),
-    ).select("nid_a", "nid_b", "_e.nid", "_e.side")
-    vecs = embeddings.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("_v")
-    )
-
-    def side_first(side: str, out: str):
-        return F.first(
-            F.when(F.col("side") == side, F.col("_v")), ignorenulls=True
-        ).alias(out)
-
-    from .verify import reassembly_partitions
-
-    matched = exploded.join(vecs, "nid", "inner")
-    return (
-        # pin the reassembly width (see verify.reassembly_partitions): the
-        # cosine re-rank downstream is CPU-dense and AQE's byte-based
-        # coalescing serializes it onto 1-3 tasks at bench scale
-        matched.repartition(
-            reassembly_partitions(matched), "nid_a", "nid_b"
-        )
-        .groupBy("nid_a", "nid_b")
-        .agg(side_first("a", "va"), side_first("b", "vb"))
-        .filter(F.col("va").isNotNull() & F.col("vb").isNotNull())
+    return reassemble_pairs(
+        nid_pairs,
+        embeddings.select(id_col, F.col(vec_col).alias("v")),
+        ["v"],
+        ids=("nid_a", "nid_b"),
+        id_col=id_col,
+        site="_pair_vectors(embeddings)",
     )
 
 
@@ -234,7 +212,9 @@ def _topk_from_pairs(
     computed every cosine twice), then expand to both orientations with a
     shuffle-free projection and window-rank."""
     scored = _pair_vectors(nid_pairs, embeddings, id_col, vec_col).select(
-        "nid_a", "nid_b", F.round(cosine_col("va", "vb"), 6).alias("cosine")
+        "nid_a",
+        "nid_b",
+        F.round(cosine_col("v_a", "v_b"), 6).alias("cosine"),
     )
     directed = scored.select(
         F.col("nid_a").alias("query_id"),
@@ -409,7 +389,7 @@ def embedding_near_dup_pairs(
         .select(
             F.col("nid_a").alias("id_a"),
             F.col("nid_b").alias("id_b"),
-            F.round(cosine_col("va", "vb"), 6).alias("cosine"),
+            F.round(cosine_col("v_a", "v_b"), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

@@ -34,7 +34,12 @@ from ..operators.exact import (
 from ..operators.groups import cluster_memberships, filter_ignored
 from ..operators.lsh import minhash_bands, pairs_from_buckets, simhash_buckets
 from ..operators.connected_components import DRIVER_CC_THRESHOLD
-from ..operators.stats import assemble_stats_row, stats_totals, tier_aggregates
+from ..operators.stats import (
+    _with_tokens,
+    assemble_stats_row,
+    stats_totals,
+    tier_aggregates,
+)
 from ..operators.substring import substring_candidates, verify_substring_pairs
 from ..operators.verify import verify_pairs
 from ..schemas import CANDIDATE_PAIRS, CLUSTERS, VERIFIED_EDGES
@@ -446,7 +451,9 @@ class Pipeline:
                 mem_clusters = clusters
 
             def build_memberships() -> DataFrame:
-                parts = [exact]
+                # an exact_memberships table resumed from a catalog written
+                # before n_tokens rode the membership row gets it joined on
+                parts = [_with_tokens(exact, fingerprints)]
                 for tier in active_tiers:
                     tier_clusters = mem_clusters.filter(
                         F.col("tier") == tier

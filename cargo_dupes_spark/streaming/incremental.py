@@ -17,12 +17,17 @@ re-scanning the corpus. This module is that incremental path:
     corpus-bounded, so it belongs in a table joined per-batch.
   * NEAR tier (``tiers=("exact", "near")``): each batch's canonical docs
     are checked against accumulated MinHash band-key state with the batch
-    tier's exact shingle/signature config and verified by exact Jaccard —
-    see ``_process_near_tier`` for the state layout and replay contract.
+    tier's exact shingle/signature config and verified by exact Jaccard
+    (``_process_near_tier``).
   * SUBSTRING tier (``tiers`` includes 'substring'): canonical docs'
     winnowed fingerprints probe accumulated fingerprint state and
-    candidates verify with the exact rolling-hash LCS — see
-    ``_process_substring_tier``.
+    candidates verify with the exact rolling-hash LCS
+    (``_process_substring_tier``).
+  Both run ONE skeleton, ``_probe_tier`` (probe, in-batch pairs, one
+  verify call through the batch tier's own ``verify_pairs`` /
+  ``verify_substring_pairs``, dup append, state append); see it for the
+  replay contract. The tiers differ only in their keys, tables and verify
+  call (``_ProbeTier``).
   * ``windowed_doc_stats`` — watermark + windowed aggregation (late-data
     tolerant ingest monitoring: docs/tokens per lang per window).
 
@@ -61,13 +66,18 @@ import os
 import shutil
 import threading
 from contextlib import contextmanager
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..functions.shingles import with_shingles
+from ..functions.signatures import signature_udf
 from ..operators.exact import apply_gates, prepare_columns
+from ..operators.lsh import minhash_band_keys_col, pairs_from_buckets
+from ..operators.substring import verify_substring_pairs, winnow_udf
+from ..operators.verify import verify_pairs
 from ..schemas import WEB_PAGES
 from ..sources.catalog import Catalog
 
@@ -194,6 +204,186 @@ def _process_exact_tier(
     return canonical, commit
 
 
+class _ProbeTier(NamedTuple):
+    """What tells the near and substring tiers apart; ``_probe_tier`` is
+    everything they share."""
+
+    name: str  # pair tier label; metrics stage is stream_<name>
+    probe_table: str  # flat (url, band_key, batch_id)
+    payload_table: str  # url-bucketed (url, lang, <payload>, batch_id)
+    payload: str  # the column the verify step reads
+    dups_table: str
+    dropped_metric: str
+    # (pairs, payload, cfg) -> (url_a, url_b, similarity, *edge_cols)
+    verify: Callable[[DataFrame, DataFrame, PipelineConfig], DataFrame]
+    edge_cols: tuple[str, ...] = ()
+
+
+def _verify_substring(
+    pairs: DataFrame, texts: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    return verify_substring_pairs(pairs, texts, cfg).withColumn(
+        "lcs_len", F.col("span_a_end") - F.col("span_a_start")
+    )
+
+
+_NEAR = _ProbeTier(
+    "near", BANDS_TABLE, SIGS_TABLE, "shingles", NEAR_DUPS_TABLE,
+    "dropped_band_keys", verify_pairs,
+)
+_SUBSTRING = _ProbeTier(
+    "substring", WINNOW_TABLE, TEXTS_TABLE, "norm_text", SUBSTR_DUPS_TABLE,
+    "dropped_winnow_keys", _verify_substring, ("lcs_len",),
+)
+
+
+def _probe_tier(
+    tier: _ProbeTier,
+    docs: DataFrame,
+    catalog: Catalog,
+    cfg: PipelineConfig,
+    batch_id: int,
+) -> None:
+    """One micro-batch of a probe tier. ``docs`` are the batch's canonical
+    docs, one row per url: (url, lang, <tier.payload>, band_keys).
+
+      1. The batch's keys probe the flat probe table. Probe fan-out is
+         bounded (never silent, SURVEY §7.4 risk 4): a state key the batch
+         hit that more than cfg.max_bucket_size state rows share is
+         excluded and ACCOUNTED (``tier.dropped_metric``); a true pair
+         shares many other keys. The sizing aggregates only the state rows
+         of the batch's keys, never the whole table.
+      2. A match under the doc's OWN url is a replay; any other match is a
+         cross pair (matched state url, batch url).
+      3. In-batch pairs come from the batch tier's capped/salted/accounted
+         ``pairs_from_buckets`` (a hot key inside one availableNow backfill
+         batch would otherwise self-join quadratically); the smaller url is
+         the canonical side.
+      4. ONE verify call (the batch tier's own, so a borderline pair
+         classifies identically) checks cross and in-batch pairs against
+         ONE payload: the batch rows plus the matched state rows of urls
+         not in the batch. A re-sent url's batch copy wins, so the payload
+         stays one row per url, and its cross pairs take the in-batch
+         orientation; a pair found both ways merges in the reassembly
+         groupBy.
+      5. Edges append to ``tier.dups_table`` with url = url_b and
+         matched_url = url_a (the state side, or the smaller url).
+      6. Docs that are neither a dup this batch nor a replay enter state.
+
+    Replay safety mirrors the exact tier: a replayed doc finds its OWN keys
+    in state -> (a) step 2 keeps self-matches out of the dup stream,
+    (b) step 6 skips its state re-append. The payload append runs BEFORE
+    the probe append and replay detection keys on the probe table (the
+    later commit), so a crash between the two re-appends payload rows as
+    exact-row duplicates — collapsed by the full-row dropDuplicates at
+    every read. Chains are edge semantics: matched_url may itself be a dup
+    of an earlier doc (transitive closure is the batch tier's CC job)."""
+    stage = f"stream_{tier.name}"
+    keys = docs.select("url", F.explode("band_keys").alias("band_key"))
+    pairs, flagged = pairs_from_buckets(
+        keys.select("url", F.lit(0).alias("band_id"), "band_key"),
+        cfg,
+        tier.name,
+        urls=docs,
+    )
+    n_flagged = len(flagged._cds_local_rows)  # collected by its PASS 1
+    if n_flagged:
+        catalog.record_metrics(
+            stage, {"flagged_batch_buckets": float(n_flagged)}
+        )
+
+    payload = docs.select("url", tier.payload)
+    replayed = None
+    if catalog.exists(tier.probe_table):
+        state = catalog.read(tier.probe_table).select(
+            F.col("url").alias("state_url"), "band_key"
+        )
+        hot = (
+            state.join(keys.select("band_key"), "band_key", "left_semi")
+            .groupBy("band_key")
+            .count()
+            .filter(F.col("count") > cfg.max_bucket_size)
+            .select("band_key")
+        )
+        n_hot = hot.count()
+        if n_hot:
+            catalog.record_metrics(stage, {tier.dropped_metric: float(n_hot)})
+            state = state.join(F.broadcast(hot), "band_key", "left_anti")
+        matches = keys.join(state, "band_key").localCheckpoint()
+        own = F.col("url") == F.col("state_url")
+        replayed = matches.filter(own).select("url").distinct()
+        cross = (
+            matches.filter(~own)
+            .select("url", F.col("state_url").alias("matched_url"))
+            .distinct()
+        )
+        fetched = matched_payload(catalog, cfg, tier.payload_table, cross)
+        if fetched is not None:
+            payload = payload.unionByName(
+                fetched.select("url", tier.payload).join(
+                    docs.select("url"), "url", "left_anti"
+                )
+            )
+            # a re-sent url is verified by its batch copy, so its cross
+            # pairs are in-batch pairs: smaller url first, as
+            # pairs_from_buckets orients them
+            resent = docs.select(
+                F.col("url").alias("matched_url"), F.lit(True).alias("_b")
+            )
+            in_batch = F.col("_b").isNotNull()
+            pairs = (
+                cross.join(resent, "matched_url", "left")
+                .select(
+                    F.when(in_batch, F.least("url", "matched_url"))
+                    .otherwise(F.col("matched_url"))
+                    .alias("url_a"),
+                    F.when(in_batch, F.greatest("url", "matched_url"))
+                    .otherwise(F.col("url"))
+                    .alias("url_b"),
+                    F.lit(tier.name).alias("tier"),
+                )
+                .unionByName(pairs)
+            )
+
+    batch_col = F.lit(int(batch_id)).alias("batch_id")
+    # threshold on the RAW similarity inside verify, round only at output.
+    # The verify runs at the pinned reassembly width; its output (a few
+    # rows per batch doc) is read back as one partition, so the dup append
+    # writes one file instead of one per reassembly partition.
+    edges = (
+        tier.verify(pairs, payload, cfg)
+        .select(
+            F.col("url_b").alias("url"),
+            F.col("url_a").alias("matched_url"),
+            *tier.edge_cols,
+            F.round("similarity", 6).alias("similarity"),
+            batch_col,
+        )
+        .localCheckpoint()
+        .coalesce(1)
+    )
+    catalog.append(edges, tier.dups_table)
+
+    to_state = docs.join(edges.select("url"), "url", "left_anti")
+    if replayed is not None:
+        to_state = to_state.join(replayed, "url", "left_anti")
+    to_state = to_state.localCheckpoint()  # both appends read it
+    catalog.append(
+        to_state.select(
+            "url", "lang", tier.payload, batch_col,
+            _url_bucket_col(cfg, tier.payload_table),
+        ),
+        tier.payload_table,
+        partition_by=[_PAYLOAD_BUCKETS[tier.payload_table]],
+    )
+    catalog.append(
+        to_state.select(
+            "url", F.explode("band_keys").alias("band_key"), batch_col
+        ),
+        tier.probe_table,
+    )
+
+
 def _process_near_tier(
     new_docs: DataFrame, catalog: Catalog, cfg: PipelineConfig, batch_id: int
 ) -> None:
@@ -201,37 +391,18 @@ def _process_near_tier(
     end-to-end (north_rule: recall is measured at identical
     shingle/signature config): shingle -> fused MinHash UDF -> the SAME
     32-band LSH keys as operators/lsh.py, probed against accumulated
-    band-key state, verified by EXACT Jaccard against matched state docs'
-    shingles (reference analog: the near tier grouper.rs:95-220, applied
-    per increment).
+    band-key state, verified by EXACT Jaccard (``verify_pairs``) against
+    matched state docs' shingles (reference analog: the near tier
+    grouper.rs:95-220, applied per increment). ``_probe_tier`` runs it.
 
-    State layout (two tables; see the module docstring for why only one is
+    State layout (see the module docstring for why only one table is
     partitioned):
-      * stream_bands (url, band_key), flat — the candidate probe joins the
-        batch's band keys against the whole table.
+      * stream_bands (url, band_key), flat — the probe joins the batch's
+        band keys against the table.
       * stream_sigs (url, lang, shingles) partitioned by
         sig_bucket = pmod(xxhash64(url), N) — the verify step fetches
         shingles for MATCHED state urls only, pruned to their buckets.
-    Probe fan-out is bounded on BOTH sides (never silent, SURVEY §7.4
-    risk 4): in-batch pairing routes through the batch tier's own
-    capped/salted/accounted ``nid_pairs_from_buckets``; state band keys
-    matching more than cfg.max_bucket_size rows are excluded from the
-    cross probe and ACCOUNTED ('dropped_band_keys' metric); a true near
-    pair shares many other bands.
-
-    Replay safety mirrors the exact tier: a replayed doc finds its OWN
-    band keys in state -> (a) the url != matched_url filter keeps
-    self-matches out of the dup stream, (b) docs whose url already owns
-    band state are excluded from the state re-append. The sigs append runs
-    BEFORE the bands append and replay detection keys on bands (the later
-    commit), so a crash between the two re-appends sigs as exact-row
-    duplicates — collapsed by the full-row dropDuplicates at every read.
-    Chains are edge semantics: matched_url may itself be a near-dup of an
-    earlier doc (transitive closure is the batch tier's CC job)."""
-    from ..functions.shingles import jaccard_col, with_shingles
-    from ..functions.signatures import signature_udf
-    from ..operators.lsh import minhash_band_keys_col
-
+    Hot band keys are accounted as 'dropped_band_keys'."""
     sig_fn = signature_udf(
         cfg.num_perm, cfg.minhash_seed, want_minhash=True, want_simhash=False
     )
@@ -248,150 +419,7 @@ def _process_near_tier(
         .select("url", "lang", "shingles", "band_keys")
         .localCheckpoint()  # one Arrow pass; many downstream consumers
     )
-    batch_bands = sigs.select(
-        "url", F.explode("band_keys").alias("band_key")
-    )
-
-    batch_shingles = sigs.select("url", "shingles")
-    near = None
-    replayed = None
-    if catalog.exists(BANDS_TABLE):
-        state_bands = catalog.read(BANDS_TABLE).select(
-            F.col("url").alias("state_url"), "band_key"
-        )
-        # cap probe fan-out: a boilerplate band key owned by a huge slice of
-        # the corpus would fan the join out quadratically per batch
-        sizes = state_bands.groupBy("band_key").agg(
-            F.count(F.lit(1)).alias("sz")
-        )
-        hot = sizes.filter(F.col("sz") > cfg.max_bucket_size)
-        n_hot = hot.count()
-        if n_hot:
-            catalog.record_metrics(
-                "stream_near", {"dropped_band_keys": float(n_hot)}
-            )
-            state_bands = state_bands.join(
-                F.broadcast(hot.select("band_key")), "band_key", "left_anti"
-            )
-        matches = batch_bands.join(state_bands, "band_key").localCheckpoint()
-        replayed = (
-            matches.filter(F.col("url") == F.col("state_url"))
-            .select("url")
-            .distinct()
-        )
-        cross = (
-            matches.filter(F.col("url") != F.col("state_url"))
-            .select("url", F.col("state_url").alias("matched_url"))
-            .distinct()
-        )
-        state_sigs = matched_payload(catalog, cfg, SIGS_TABLE, cross)
-        if state_sigs is not None:
-            state_sigs = state_sigs.select(
-                F.col("url").alias("matched_url"),
-                F.col("shingles").alias("m_shingles"),
-            )
-            # threshold on the RAW jaccard (rounding only at output) so a
-            # borderline pair classifies identically to the batch tier's
-            # verify_pairs
-            near = (
-                cross.join(batch_shingles, "url")
-                .join(state_sigs, "matched_url")
-                .withColumn(
-                    "similarity", jaccard_col("shingles", "m_shingles")
-                )
-                .filter(F.col("similarity") >= cfg.jaccard_threshold)
-                .select("url", "matched_url", "similarity")
-            )
-
-    # in-batch near pairs through the batch tier's capped/salted/accounted
-    # pair machinery (a hot boilerplate band key inside one availableNow
-    # backfill batch would otherwise self-join quadratically); the smaller
-    # url is the canonical side (deterministic, batch-internal)
-    from ..operators.lsh import pairs_from_buckets
-
-    ib_pairs, ib_flagged = pairs_from_buckets(
-        batch_bands.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        "near",
-        urls=sigs,
-    )
-    ib_rows = getattr(ib_flagged, "_cds_local_rows", None)
-    n_ib_flagged = len(ib_rows) if ib_rows is not None else ib_flagged.count()
-    if n_ib_flagged:
-        catalog.record_metrics(
-            "stream_near", {"flagged_batch_buckets": float(n_ib_flagged)}
-        )
-    # single-shuffle shingle reassembly (the verify_pairs restructure,
-    # operators/verify.py) — batch-bounded either way, but the shingle
-    # payload still crosses one exchange instead of two
-    ib_exploded = ib_pairs.select(
-        "url_a",
-        "url_b",
-        F.explode(
-            F.array(
-                F.struct(F.col("url_a").alias("u"), F.lit("a").alias("side")),
-                F.struct(F.col("url_b").alias("u"), F.lit("b").alias("side")),
-            )
-        ).alias("_e"),
-    ).select("url_a", "url_b", "_e.u", "_e.side")
-    ib_near = (
-        ib_exploded.join(
-            batch_shingles.select(F.col("url").alias("u"), "shingles"), "u"
-        )
-        .groupBy("url_a", "url_b")
-        .agg(
-            F.first(
-                F.when(F.col("side") == "a", F.col("shingles")),
-                ignorenulls=True,
-            ).alias("m_shingles"),
-            F.first(
-                F.when(F.col("side") == "b", F.col("shingles")),
-                ignorenulls=True,
-            ).alias("shingles"),
-        )
-        .filter(
-            F.col("shingles").isNotNull() & F.col("m_shingles").isNotNull()
-        )
-        .withColumn("similarity", jaccard_col("shingles", "m_shingles"))
-        .filter(F.col("similarity") >= cfg.jaccard_threshold)
-        # the smaller url (url_a) is the canonical side -> matched_url
-        .select(
-            F.col("url_b").alias("url"),
-            F.col("url_a").alias("matched_url"),
-            "similarity",
-        )
-    )
-    near = ib_near if near is None else near.unionByName(ib_near)
-
-    batch_col = F.lit(int(batch_id)).alias("batch_id")
-    near = near.select(
-        "url", "matched_url", F.round("similarity", 6).alias("similarity"),
-        batch_col,
-    ).localCheckpoint()
-    catalog.append(near, NEAR_DUPS_TABLE)
-
-    # canonical docs enter near state: not a near-dup this batch, not
-    # already owning band state (replay)
-    to_state = sigs.join(
-        near.select("url").distinct(), "url", "left_anti"
-    )
-    if replayed is not None:
-        to_state = to_state.join(replayed, "url", "left_anti")
-    to_state = to_state.localCheckpoint()  # sigs + bands appends both read it
-    catalog.append(
-        to_state.select(
-            "url", "lang", "shingles", batch_col,
-            _url_bucket_col(cfg, SIGS_TABLE),
-        ),
-        SIGS_TABLE,
-        partition_by=[_PAYLOAD_BUCKETS[SIGS_TABLE]],
-    )
-    catalog.append(
-        to_state.select(
-            "url", F.explode("band_keys").alias("band_key"), batch_col
-        ),
-        BANDS_TABLE,
-    )
+    _probe_tier(_NEAR, sigs, catalog, cfg, batch_id)
 
 
 def _process_substring_tier(
@@ -402,143 +430,33 @@ def _process_substring_tier(
     >= min_substring_len chars is detected, reusing the batch tier's
     winnowing candidate generation + exact rolling-hash LCS verify
     (operators/substring.py) against accumulated fingerprint state.
+    ``_probe_tier`` runs it.
 
     State layout (the near tier's shape: a flat probe table, a url-bucketed
     payload table):
       * stream_winnow (url, band_key), flat — winnowed fingerprints (~2% of
-        chars), probed by joining the batch's fingerprints against the
-        whole table.
+        chars) keyed xxhash64(lang, fph), probed by joining the batch's
+        fingerprints against the table.
       * stream_texts (url, lang, norm_text) partitioned by
         text_bucket = pmod(xxhash64(url), N) — the verify step fetches
         norm_text for MATCHED state urls only, pruned to their buckets.
-    Hot fingerprint keys (boilerplate runs shared corpus-wide) are excluded
-    from the cross probe above cfg.max_bucket_size and ACCOUNTED
-    ('dropped_winnow_keys'); in-batch pairing routes through the
-    capped/salted/accounted pair machinery. Replay safety mirrors the near
-    tier: self-matches filter out of the dup stream, docs whose url already
-    owns winnow state skip the state re-append, texts append before winnow
-    (replay detection keys on the later commit)."""
-    from ..operators.lsh import pairs_from_buckets
-    from ..operators.substring import verify_substring_pairs, winnow_udf
-
-    eligible = (
+    Hot fingerprint keys (boilerplate runs shared corpus-wide) are
+    accounted as 'dropped_winnow_keys'."""
+    fph = winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
+    docs = (
         new_docs.filter(F.length("norm_text") >= cfg.min_substring_len)
-        .select("url", "lang", "norm_text")
+        .select("url", "lang", "norm_text", fph.alias("_fph"))
+        .select(
+            "url",
+            "lang",
+            "norm_text",
+            F.transform("_fph", lambda h: F.xxhash64("lang", h)).alias(
+                "band_keys"
+            ),
+        )
         .localCheckpoint()
     )
-    fps = eligible.select(
-        "url",
-        F.explode(
-            winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
-        ).alias("fph"),
-        "lang",
-    ).select(
-        "url", F.xxhash64("lang", "fph").alias("band_key")
-    ).localCheckpoint()
-
-    edges = None
-    replayed = None
-    if catalog.exists(WINNOW_TABLE):
-        state_fps = catalog.read(WINNOW_TABLE).select(
-            F.col("url").alias("state_url"), "band_key"
-        )
-        sizes = state_fps.groupBy("band_key").agg(
-            F.count(F.lit(1)).alias("sz")
-        )
-        hot = sizes.filter(F.col("sz") > cfg.max_bucket_size)
-        n_hot = hot.count()
-        if n_hot:
-            catalog.record_metrics(
-                "stream_substring", {"dropped_winnow_keys": float(n_hot)}
-            )
-            state_fps = state_fps.join(
-                F.broadcast(hot.select("band_key")), "band_key", "left_anti"
-            )
-        matches = fps.join(state_fps, "band_key").localCheckpoint()
-        replayed = (
-            matches.filter(F.col("url") == F.col("state_url"))
-            .select("url")
-            .distinct()
-        )
-        cross = (
-            matches.filter(F.col("url") != F.col("state_url"))
-            .select("url", F.col("state_url").alias("matched_url"))
-            .distinct()
-        )
-        state_texts = matched_payload(catalog, cfg, TEXTS_TABLE, cross)
-        if state_texts is not None:
-            state_texts = (
-                state_texts.select("url", "norm_text")
-                # a url present in BOTH batch and state (re-sent url) must
-                # contribute ONE text row — the batch's wins
-                .join(eligible.select("url"), "url", "left_anti")
-            )
-            texts = eligible.select("url", "norm_text").unionByName(
-                state_texts
-            )
-            cross_pairs = cross.select(
-                F.col("matched_url").alias("url_a"),
-                F.col("url").alias("url_b"),
-                F.lit("substring").alias("tier"),
-            )
-            edges = verify_substring_pairs(cross_pairs, texts, cfg).select(
-                F.col("url_b").alias("url"),
-                F.col("url_a").alias("matched_url"),
-                (F.col("span_a_end") - F.col("span_a_start")).alias("lcs_len"),
-                "similarity",
-            )
-
-    # in-batch pairs through the capped/salted/accounted machinery
-    ib_pairs, ib_flagged = pairs_from_buckets(
-        fps.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        "substring",
-        urls=eligible,
-    )
-    ib_rows = getattr(ib_flagged, "_cds_local_rows", None)
-    n_ib_flagged = len(ib_rows) if ib_rows is not None else ib_flagged.count()
-    if n_ib_flagged:
-        catalog.record_metrics(
-            "stream_substring", {"flagged_batch_buckets": float(n_ib_flagged)}
-        )
-    ib_edges = verify_substring_pairs(ib_pairs, eligible, cfg).select(
-        # the smaller url (url_a) is the canonical side -> matched_url
-        F.col("url_b").alias("url"),
-        F.col("url_a").alias("matched_url"),
-        (F.col("span_a_end") - F.col("span_a_start")).alias("lcs_len"),
-        "similarity",
-    )
-    edges = ib_edges if edges is None else edges.unionByName(ib_edges)
-
-    batch_col = F.lit(int(batch_id)).alias("batch_id")
-    edges = edges.select(
-        "url", "matched_url", "lcs_len",
-        F.round("similarity", 6).alias("similarity"), batch_col,
-    ).localCheckpoint()
-    catalog.append(edges, SUBSTR_DUPS_TABLE)
-
-    # canonical docs enter substring state: not a substring-dup this batch,
-    # not already owning winnow state (replay)
-    to_state = eligible.join(
-        edges.select("url").distinct(), "url", "left_anti"
-    )
-    if replayed is not None:
-        to_state = to_state.join(replayed, "url", "left_anti")
-    to_state = to_state.localCheckpoint()
-    catalog.append(
-        to_state.select(
-            "url", "lang", "norm_text", batch_col,
-            _url_bucket_col(cfg, TEXTS_TABLE),
-        ),
-        TEXTS_TABLE,
-        partition_by=[_PAYLOAD_BUCKETS[TEXTS_TABLE]],
-    )
-    catalog.append(
-        fps.join(to_state.select("url"), "url", "inner").select(
-            "url", "band_key", batch_col
-        ),
-        WINNOW_TABLE,
-    )
+    _probe_tier(_SUBSTRING, docs, catalog, cfg, batch_id)
 
 
 def incremental_dedup(
@@ -560,7 +478,7 @@ def incremental_dedup(
          are MinHash-banded with the batch tier's exact config, probed
          against ``stream_bands``, exact-Jaccard-verified against matched
          docs' shingles from ``stream_sigs``, and appended to
-         ``stream_near_dups`` (see ``_process_near_tier``).
+         ``stream_near_dups`` (see ``_probe_tier``).
     Step 2's appends run on a driver thread while step 3 (and the
     substring tier) run; the batch returns only after all of them commit.
 
@@ -691,7 +609,7 @@ def matched_payload(
     PartitionFilter on the scan (hive layout under the parquet fallback,
     identity partition spec under Iceberg) and every other bucket's files
     are never opened. The full-row dropDuplicates collapses crash residue
-    (exact-row duplicates, see ``_process_near_tier``)."""
+    (exact-row duplicates, see ``_probe_tier``)."""
     bucket = _PAYLOAD_BUCKETS[table]
     buckets = [
         r[0]

@@ -80,3 +80,37 @@ def test_query_matches_oracle(spark, duck, name):
     pd.testing.assert_frame_equal(
         a.astype(str), b.astype(str), check_dtype=False
     )
+
+
+def test_embedding_dim_at_fallbacks(spark, tmp_path):
+    """A corrupt embeddings file or one without an ``embedding`` column
+    takes the DataFrame fallback; a NULL first vector still raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    emb = spark.createDataFrame(
+        [(1, [0.5, 0.25, 1.0])], "vec_id bigint, embedding array<float>"
+    )
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "embeddings.parquet").write_bytes(b"not a parquet file" * 8)
+    assert entry_mod._embedding_dim_at(str(corrupt), emb) == 3
+
+    no_col = tmp_path / "no_col"
+    no_col.mkdir()
+    pq.write_table(
+        pa.table({"vec_id": [1], "vector": [[1.0, 2.0]]}),
+        no_col / "embeddings.parquet",
+    )
+    assert entry_mod._embedding_dim_at(str(no_col), emb) == 3
+
+    null_vec = tmp_path / "null_vec"
+    null_vec.mkdir()
+    pq.write_table(
+        pa.table(
+            {"embedding": pa.array([None, [1.0]], pa.list_(pa.float32()))}
+        ),
+        null_vec / "embeddings.parquet",
+    )
+    with pytest.raises(ValueError, match="empty .or embedding is NULL"):
+        entry_mod._embedding_dim_at(str(null_vec), emb)

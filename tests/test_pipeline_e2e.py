@@ -148,6 +148,37 @@ def test_resume_skips_and_matches(spark, tmp_path):
     assert out2["memberships"].count() == n1
 
 
+def test_resume_exact_memberships_without_n_tokens(spark, tmp_path):
+    """A catalog whose exact_memberships table predates the n_tokens
+    column resumes: memberships re-run over it with the same rows and
+    stats as a fresh run."""
+    import shutil
+
+    cfg = PipelineConfig(warehouse=str(tmp_path / "wh_old"))
+    df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
+    out1 = Pipeline(spark, cfg, detectors=("minhash",), resume=True).run(df)
+    want = sorted(tuple(r) for r in out1["memberships"].collect())
+    want_stats = out1["stats"].collect()
+
+    wh = tmp_path / "wh_old"
+    old = wh / "exact_memberships__old"
+    spark.read.parquet(str(wh / "exact_memberships")).drop(
+        "n_tokens"
+    ).write.parquet(str(old))
+    shutil.rmtree(wh / "exact_memberships")
+    old.rename(wh / "exact_memberships")
+    for stage in ("memberships", "stats"):
+        (wh / f"{stage}._meta.json").unlink()
+
+    p2 = Pipeline(spark, cfg, detectors=("minhash",), resume=True)
+    out2 = p2.run(df)
+    assert "skip:exact_memberships" in p2.stage_log
+    assert "run:memberships" in p2.stage_log
+    got = sorted(tuple(r) for r in out2["memberships"].collect())
+    assert got == want
+    assert out2["stats"].collect() == want_stats
+
+
 def test_lineage_and_metrics_written(spark, pipeline_run):
     cfg, df, corpus, out = pipeline_run
 

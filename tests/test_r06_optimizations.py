@@ -119,15 +119,13 @@ def test_bucket_dedup_pair_set_identical(spark):
 
 
 def test_single_sorted_matches_orderby(spark):
-    import __spark_entry__ as entry
-
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").limit(200)
     base = docs.select("doc_id", F.length("text").alias("v"))
-    got = entry._single_sorted(base, "doc_id").collect()
+    got = dedup.single_sorted(base, "doc_id").collect()
     want = base.orderBy("doc_id").collect()
     assert got == want
     # and it is genuinely one sorted partition (no range exchange)
-    assert entry._single_sorted(base, "doc_id").rdd.getNumPartitions() == 1
+    assert dedup.single_sorted(base, "doc_id").rdd.getNumPartitions() == 1
 
 
 def test_pipeline_fan_out_is_conditional(spark):
@@ -149,6 +147,53 @@ def test_near_clusters_shortcut_matches_full_operator(spark):
     # near_dup_clusters_wide (full connected_components operator path)
     got = dedup.near_dup_clusters(spark, "/root/testdata/sf0.01").collect()
     want = dedup.near_dup_clusters_wide(spark, "/root/testdata/sf0.01").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_near_clusters_bounds_collect_before_threshold(
+    spark, tmp_path, monkeypatch
+):
+    """With the driver-CC threshold forced tiny, near_dup_clusters collects
+    at most threshold + 1 edges, finds the result full, and takes the
+    distributed operator path, with the same output."""
+    from cargo_dupes_spark.operators import connected_components as cc
+
+    def word(doc, i):  # letters only: digits would be masked alike
+        return "".join(chr(97 + int(c)) for c in f"{doc:03d}{i:03d}")
+
+    rows = [
+        (doc, " ".join(word(doc, i) for i in range(60)), "en", "web", 0)
+        for doc in range(70)
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, "
+        "n_chars int"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    sf = str(tmp_path)
+    want = dedup.near_dup_clusters(spark, sf).collect()
+    assert len(want) == 20  # every 7th doc and its planted near copy
+
+    threshold = 3
+    monkeypatch.setattr(cc, "DRIVER_CC_THRESHOLD", threshold)
+    frame_cls = type(spark.range(1))
+    real_to_pandas = frame_cls.toPandas
+    real_cc = dedup.connected_components
+    collected, cc_calls = [], []
+
+    def to_pandas(self):
+        pdf = real_to_pandas(self)
+        collected.append(len(pdf))
+        return pdf
+
+    def spy_cc(*args, **kwargs):
+        cc_calls.append(kwargs)
+        return real_cc(*args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "toPandas", to_pandas)
+    monkeypatch.setattr(dedup, "connected_components", spy_cc)
+    got = dedup.near_dup_clusters(spark, sf).collect()
+    assert collected[0] == threshold + 1
+    assert cc_calls
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 

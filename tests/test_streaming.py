@@ -779,3 +779,103 @@ def test_repeated_url_in_drop_keeps_one_row(spark, stream_env):
     assert ("http://r.example/2", "http://r.example/1") in near
     substr = _rows(catalog, SUBSTR_DUPS_TABLE, "url", "matched_url")
     assert ("http://r.example/4", "http://r.example/3") in substr
+
+
+def _jaccard(spark, cfg, text_a, text_b):
+    """Exact shingle Jaccard of two texts, through the stream's own
+    normalize and shingle code."""
+    from cargo_dupes_spark.functions.shingles import with_shingles
+    from cargo_dupes_spark.streaming.incremental import _fingerprint_batch
+
+    docs = _fingerprint_batch(
+        _pages(spark, [("a", TS, text_a, "en"), ("b", TS, text_b, "en")]),
+        cfg,
+        with_text=True,
+    )
+    sh = {
+        r.url: set(r.shingles)
+        for r in with_shingles(
+            docs, "norm_text", cfg.shingle_k, cfg.shingle_seed
+        ).collect()
+    }
+    return len(sh["a"] & sh["b"]) / len(sh["a"] | sh["b"])
+
+
+@pytest.mark.parametrize("y", ["http://a.example/2", "http://y.example/2"])
+def test_resent_url_batch_copy_wins(spark, stream_env, monkeypatch, y):
+    """A url re-sent with changed text while another doc of the same batch
+    matches the url's STATE copy: the verify payload holds one row per url
+    (the contract check raises otherwise), the pair is verified against
+    the batch's copy, and it is written once, in the in-batch orientation
+    (smaller url matched), whichever url sorts first; no self edge."""
+    from cargo_dupes_spark.streaming.incremental import NEAR_DUPS_TABLE
+
+    monkeypatch.setenv("CARGO_DUPES_DEBUG_CONTRACTS", "1")
+    cfg, catalog, drop_dir, ckpt = stream_env
+    x = "http://x.example/1"
+    _pages(spark, [(x, TS, _LONG, "en")]).coalesce(1).write.mode(
+        "append"
+    ).parquet(drop_dir)
+    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+    assert not catalog.exists(NEAR_DUPS_TABLE) or not catalog.read(
+        NEAR_DUPS_TABLE
+    ).count()
+
+    # y is a near copy of x's state text AND of x's new text: a cross pair
+    # (through x's state bands) and an in-batch pair, both of x and y
+    wave2 = [(x, TS, _LONG_EDITED, "en"), (y, TS, _LONG_EDITED2, "en")]
+    _pages(spark, wave2).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+
+    rows = catalog.read(NEAR_DUPS_TABLE).collect()
+    assert [(r.url, r.matched_url) for r in rows] == [(max(x, y), min(x, y))]
+    batch_j = round(_jaccard(spark, cfg, _LONG_EDITED, _LONG_EDITED2), 6)
+    state_j = round(_jaccard(spark, cfg, _LONG, _LONG_EDITED2), 6)
+    assert batch_j != state_j
+    assert rows[0].similarity == batch_j
+
+
+def test_hot_keys_sized_over_batch_keys_only(spark, stream_env, tmp_path):
+    """Hot probe keys are sized over the keys the batch carries: of two
+    planted hot band keys, only the one a batch doc carries is dropped and
+    counted in dropped_band_keys."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from cargo_dupes_spark.streaming.incremental import BANDS_TABLE
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    cfg = replace(cfg, max_bucket_size=4)
+    _pages(spark, NEAR_WAVE2).coalesce(1).write.mode("append").parquet(
+        drop_dir
+    )
+
+    # the band keys the batch carries, from a run into a second warehouse
+    keys_run = Catalog(spark, str(tmp_path / "wh_keys"), cfg.config_hash())
+    _drain_near(
+        read_web_pages_stream(spark, drop_dir), keys_run, cfg,
+        str(tmp_path / "ckpt_keys"),
+    )
+    bands = keys_run.read(BANDS_TABLE)
+    carried = {r.band_key for r in bands.collect()}
+    hit_key = min(
+        r.band_key
+        for r in bands.filter(F.col("url") == "http://o.example/10").collect()
+    )
+    miss_key = next(k for k in range(1, 100) if k not in carried)
+    planted = [
+        (f"http://hot.example/{k}/{i}", k, -1)
+        for k in (hit_key, miss_key)
+        for i in range(cfg.max_bucket_size + 1)
+    ]
+    catalog.append(spark.createDataFrame(planted, bands.schema), BANDS_TABLE)
+
+    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+    dropped = [
+        r.value
+        for r in catalog.read_metrics()
+        .filter(F.col("metric") == "dropped_band_keys")
+        .collect()
+    ]
+    assert dropped == [1.0]

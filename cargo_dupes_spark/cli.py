@@ -137,7 +137,7 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
         if cmd == "ignored":
-            for row in load_ignore(catalog).collect():
+            for row in load_ignore(catalog, bits=cfg.fingerprint_bits).collect():
                 print(f"{_fp_hex(row.fingerprint)}  {row.reason or ''}")
             return 0
 
@@ -205,7 +205,7 @@ def main(argv: list[str] | None = None) -> int:
 
         groups = filter_ignored(
             assemble_groups(out["memberships"], out["fingerprints"]),
-            load_ignore(catalog),
+            load_ignore(catalog, bits=cfg.fingerprint_bits),
         )
         if cmd == "stats":
             out["stats"].show(truncate=False)

@@ -8,6 +8,11 @@ oracle SQL (`__spark_entry__.py`), making exact-tier grouping, LSH recall,
 connected components, and substring containment all checkable against ANSI
 SQL + recursive CTEs at sf0.01.
 
+The queries build candidate keys with the pipeline's own functions — near
+signatures and band keys with ``operators/lsh.with_signatures``, winnow keys
+with ``operators/substring.with_winnow_keys`` — so a green oracle row checks
+the production key path, not a copy of it.
+
 Float-valued outputs are emitted as `*_e6 BIGINT` (value * 1e6, rounded) so
 the driver's value-hash comparison is immune to double formatting drift.
 """
@@ -19,34 +24,17 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.normalize import normalize_text_col, n_tokens_col
-from ..functions.shingles import jaccard_col, with_shingles
-from ..functions.signatures import signature_udf
 from ..operators.connected_components import connected_components
-from ..operators.lsh import minhash_bands, pairs_from_buckets, simhash_buckets
+from ..operators.lsh import (
+    minhash_bands,
+    pairs_from_buckets,
+    simhash_buckets,
+    simhash_chunk_keys_col,
+    with_signatures,
+)
 from ..operators.verify import verify_pairs
 
 CFG = PipelineConfig()  # shared shingle/signature config for the oracle
-
-
-def _signatures_from(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, norm_text) -> (url, lang, shingles, minhash, simhash)
-    with the shared oracle config — the near-tier signature builder."""
-    base = with_shingles(
-        docs.select(
-            F.col("doc_id").cast("string").alias("url"), "lang", "norm_text"
-        ),
-        "norm_text",
-        CFG.shingle_k,
-        CFG.shingle_seed,
-    ).drop("norm_text")
-    sig = signature_udf(CFG.num_perm, CFG.minhash_seed)
-    return base.withColumn("_sig", sig(F.col("shingles"))).select(
-        "url",
-        "lang",
-        "shingles",
-        F.col("_sig.minhash").alias("minhash"),
-        F.col("_sig.simhash").alias("simhash"),
-    )
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,6 +183,26 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _near_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified near-tier edges over the near-copy union: signatures from
+    the shared key function (``with_signatures``, minhash only — the pairs
+    are tier 'near', so verify reads no simhash), pinned with a
+    localCheckpoint because banding and verify both read them."""
+    docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
+    sigs = with_signatures(
+        docs.select(
+            F.col("doc_id").cast("string").alias("url"), "lang", "norm_text"
+        ),
+        CFG,
+        minhash=True,
+        simhash=False,
+    ).localCheckpoint(eager=False)
+    pairs, _ = pairs_from_buckets(
+        minhash_bands(sigs), CFG, "near", urls=sigs, collect_flagged=False
+    )
+    return verify_pairs(pairs, sigs, CFG)
+
+
 def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[F5/F7/J3/J4] the full MinHash→LSH→verify path over the near-copy
     union. The ORACLE is brute-force SQL Jaccard over token-shingle sets —
@@ -205,13 +213,7 @@ def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding and both verify joins read it, and without the checkpoint the
     UDF chain re-runs once per consumer (the production Pipeline checkpoints
     every stage to the catalog instead)."""
-    docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
-    sigs = _signatures_from(docs).localCheckpoint(eager=False)
-    pairs, _ = pairs_from_buckets(
-        minhash_bands(sigs, CFG), CFG, "near", urls=sigs,
-        collect_flagged=False,
-    )
-    edges = verify_pairs(pairs, sigs, CFG)
+    edges = _near_edges(spark, sf_dir)
     return single_sorted(
         edges.select(
             F.least(F.col("url_a").cast("long"), F.col("url_b").cast("long")).alias("id_a"),
@@ -223,12 +225,7 @@ def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
-    docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
-    sigs = _signatures_from(docs).localCheckpoint(eager=False)
-    pairs, _ = pairs_from_buckets(
-        minhash_bands(sigs, CFG), CFG, "near", urls=sigs,
-        collect_flagged=False,
-    )
+    edges = _near_edges(spark, sf_dir)
     if id_bits == 64:
         # The slice is bounded by construction (NEAR_SLICE docs), far under
         # DRIVER_CC_THRESHOLD — connected_components would take its numpy
@@ -245,7 +242,6 @@ def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
         from . import connected_components as cc
 
         threshold = cc.DRIVER_CC_THRESHOLD
-        edges = verify_pairs(pairs, sigs, CFG)
         pdf = (
             edges.select(
                 F.col("url_a").cast("long").alias("a"),
@@ -267,7 +263,7 @@ def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
             ).coalesce(1)
         # fall through to the full operator on oversized edge sets
     # CC reads the edge set repeatedly (node extraction + round 0) — pin it
-    edges = verify_pairs(pairs, sigs, CFG).localCheckpoint(eager=False)
+    edges = edges.localCheckpoint(eager=False)
     clusters = connected_components(edges, id_bits=id_bits).select(
         F.col("url").cast("long").alias("doc_id"), "cluster_id"
     )
@@ -332,10 +328,11 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = (
         sh.withColumn("simhash", simhash_udf()(F.col("shingles")))
         .select("url", "lang", "simhash")
+        .withColumn("chunk_keys", simhash_chunk_keys_col(CFG))
         .localCheckpoint(eager=False)
     )
     pairs, _ = pairs_from_buckets(
-        simhash_buckets(sigs, CFG), CFG, "simhash", urls=sigs,
+        simhash_buckets(sigs), CFG, "simhash", urls=sigs,
         collect_flagged=False,
     )
     a = sigs.select(F.col("url").alias("url_a"), F.col("simhash").alias("sh_a"))

@@ -1,5 +1,14 @@
 """Candidate-pair generation: MinHash/LSH banding + SimHash Hamming buckets.
 
+Candidate generation is one step for every text tier: one function adds a
+document's bucket keys as an array column, ``minhash_bands`` /
+``simhash_buckets`` (or the substring tier's explode) turn the array into
+(url, band_id, band_key) rows, and ``pairs_from_buckets`` pairs the urls
+that share a bucket. ``with_signatures`` builds the near tiers' keys — the
+pipeline's signatures stage, the streaming near tier and the slice queries
+all call it; ``operators/substring.with_winnow_keys`` is the substring
+tier's.
+
 This is the scale-out replacement for the reference's O(bucket²) pairwise
 loop within (kind, ⌊log2 size⌋) buckets (J2/J3,
 ``dupes-core/src/grouper.rs:115-151``): the bucketing idea survives, the
@@ -11,8 +20,9 @@ Scale notes (the parts that matter at 10^12 docs):
     join co-partitioned on it. AQE skew-join splits residual skew.
   * mega-buckets (boilerplate shingles shared by millions of docs) would
     make the self-join quadratic — buckets above cfg.max_bucket_size are
-    excluded from pairing and ACCOUNTED (returned for the lineage table;
-    never silently dropped — SURVEY §7.4 risk 4).
+    excluded from pairing and ACCOUNTED (returned as plain driver-side
+    rows for the metrics table; never silently dropped — SURVEY §7.4
+    risk 4).
   * docs of different lang never pair (the reference's hard mismatch on
     MacroCall names / per-language analyzers) — lang is folded into the
     band key, so cross-lang pairs never even co-locate.
@@ -20,10 +30,12 @@ Scale notes (the parts that matter at 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..functions.shingles import with_shingles
+from ..functions.signatures import signature_udf
 from ..functions.simhash import simhash_chunk_col
 
 
@@ -54,41 +66,84 @@ def simhash_chunk_keys_col(cfg: PipelineConfig):
     )
 
 
-def minhash_bands(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(url, band_id, band_key): one row per band per doc.
+def with_signatures(
+    docs: DataFrame, cfg: PipelineConfig, minhash: bool, simhash: bool
+) -> DataFrame:
+    """(url, lang, norm_text) -> (url, lang, shingles[, simhash][, band_keys]
+    [, chunk_keys]): the one rule that turns a document into its near-tier
+    bucket keys, shared by the pipeline's signatures stage, the streaming
+    near tier and the slice queries.
 
-    When the input carries a precomputed ``band_keys`` column (the pipeline
-    stores one: 32 x 8 B vs re-deriving from the 1 KB minhash column on
-    EVERY candidate-stage scan — pair generation scans the table twice), it
-    is exploded directly; otherwise keys are derived on the fly.
-    """
-    bands = (
-        F.col("band_keys")
-        if "band_keys" in signatures.columns
-        else minhash_band_keys_col(cfg)
+    One fused signature UDF computes both sketches from one Arrow transfer
+    of the shingle arrays. ``band_keys`` is present iff ``minhash``;
+    ``simhash`` and ``chunk_keys`` are present iff ``simhash``. The raw
+    minhash exists only to derive band_keys (banding reads band_keys,
+    verify reads shingles + simhash) and is never kept: committing it wrote
+    ~1 KB/doc of incompressible hashes that nothing read back, and the
+    candidate stage, which scans its input twice (bucket sizing + pair
+    expansion), reads the 8-byte keys instead."""
+    sig = signature_udf(
+        cfg.num_perm, cfg.minhash_seed, want_minhash=minhash, want_simhash=simhash
     )
+    out = (
+        with_shingles(
+            docs.select("url", "lang", "norm_text"),
+            "norm_text",
+            cfg.shingle_k,
+            cfg.shingle_seed,
+        )
+        .drop("norm_text")
+        .withColumn("_sig", sig(F.col("shingles")))
+        .select(
+            "url",
+            "lang",
+            "shingles",
+            F.col("_sig.minhash").alias("minhash"),
+            F.col("_sig.simhash").alias("simhash"),
+        )
+    )
+    if minhash:
+        out = out.withColumn("band_keys", minhash_band_keys_col(cfg))
+    out = out.drop("minhash")
+    if not simhash:
+        return out.drop("simhash")
+    return out.withColumn("chunk_keys", simhash_chunk_keys_col(cfg))
+
+
+def minhash_bands(signatures: DataFrame) -> DataFrame:
+    """(url, band_id, band_key): one row per band per doc, exploded from the
+    stored ``band_keys`` (``with_signatures``)."""
     return signatures.select(
-        "url", F.posexplode(bands).alias("band_id", "band_key")
+        "url", F.posexplode("band_keys").alias("band_id", "band_key")
     )
 
 
-def simhash_buckets(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(url, band_id, band_key) from SimHash bit-slices (one posexplode —
-    a single scan of the input, mirroring minhash_bands), preferring a
-    precomputed ``chunk_keys`` column when present."""
-    chunks = (
-        F.col("chunk_keys")
-        if "chunk_keys" in signatures.columns
-        else simhash_chunk_keys_col(cfg)
-    )
+def simhash_buckets(signatures: DataFrame) -> DataFrame:
+    """(url, band_id, band_key) from the stored SimHash bit-slice keys
+    (``chunk_keys``; one posexplode, mirroring minhash_bands)."""
     return signatures.select(
-        "url", F.posexplode(chunks).alias("band_id", "band_key")
+        "url", F.posexplode("chunk_keys").alias("band_id", "band_key")
     )
 
 
-FLAGGED_SCHEMA = (
-    "band_id INT, band_key BIGINT, bucket_size BIGINT, action STRING"
-)
+def _local_adjustment(spark, flagged: list[Row]) -> DataFrame:
+    """(band_key, action) of the collected flagged buckets as a
+    pandas/Arrow-backed local frame, NOT createDataFrame(row_list): a
+    pickled-Python local RDD costs a Python-worker task per core on every
+    consuming job (measured 33 CPU-s); Arrow batches convert JVM-side."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "band_key": pd.array(
+                    [r["band_key"] for r in flagged], dtype="int64"
+                ),
+                "action": pd.array([r["action"] for r in flagged], dtype=object),
+            }
+        ),
+        "band_key BIGINT, action STRING",
+    )
 
 
 def nid_pairs_from_buckets(
@@ -96,7 +151,7 @@ def nid_pairs_from_buckets(
     cfg: PipelineConfig,
     dedup_buckets: bool = True,
     collect_flagged: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row] | None]:
     """Core pair generation over (nid BIGINT, band_id, band_key) bucket rows
     -> (nid pairs with nid_a < nid_b, flagged-bucket accounting).
 
@@ -114,33 +169,28 @@ def nid_pairs_from_buckets(
     Two passes over the band rows:
       PASS 1 — a count-only aggregation (map-side combined: the shuffle
       carries (band_key, partial_count), not members) finds mega-buckets.
-      The flagged set is collected eagerly — it is bounded by the number of
-      distinct mega-buckets, tiny by construction — so no pathological
-      bucket ever materializes a member array, and nothing stays persisted
-      after the call (the old single-pass design cached full collect_list
-      arrays for the session lifetime).
+      The flagged set is bounded by the number of distinct mega-buckets,
+      tiny by construction, so no pathological bucket ever materializes a
+      member array, and nothing stays persisted after the call.
       PASS 2 — the ONE wide shuffle: dropped buckets are excluded and
       salted buckets re-keyed via a broadcast join against the flagged set,
       then each bucket's members are collected and expanded to pairs
       JVM-side with nested array transforms (measured 2x faster than the
       equivalent equi-self-join, which shuffles the band rows twice).
 
-    flagged has (band_id, band_key, bucket_size, action in
-    {'salted','dropped'}).
-
-    ``collect_flagged`` (default True, the pipeline's accounting contract):
-    PASS 1 runs as its own job and the returned ``flagged`` is materialized
-    driver-side rows. Callers that DISCARD the accounting (the driver-oracle
-    slice queries) pass False: the mega-bucket adjustment then rides PASS 2's
-    own job as a broadcast subtree — identical pair output, one fewer
-    eager job per invocation — and the returned ``flagged`` is the lazy
-    aggregation (collecting it re-runs PASS 1, which such callers never do).
-    Memory safety is the same either way: dropped buckets are excluded and
-    salted buckets re-keyed BEFORE any member array materializes.
+    ``collect_flagged`` (default True, the callers that record the
+    accounting): PASS 1 runs as its own job and ``flagged`` is the
+    collected list of Rows (band_id, band_key, bucket_size, action in
+    {'salted','dropped'}); the adjustment join is built only when that list
+    is non-empty. Callers that DISCARD the accounting (the driver-oracle
+    slice queries, the ANN candidates) pass False: the adjustment then
+    rides PASS 2's own job as a broadcast subtree — identical pair output,
+    one fewer eager job per invocation — and ``flagged`` is None. Memory
+    safety is the same either way: dropped buckets are excluded and salted
+    buckets re-keyed BEFORE any member array materializes.
     """
     cap = cfg.max_bucket_size
     salt = cfg.salt_buckets
-    spark = bucketed.sparkSession
 
     # PASS 1 sizes on band_key ALONE — the SAME key PASS 2 groups on. A
     # caller whose band_key repeats across band_ids (IVF: band_key =
@@ -161,47 +211,17 @@ def nid_pairs_from_buckets(
         .alias("action"),
     )
     if collect_flagged:
-        import pandas as pd
-
-        flagged_rows = flagged_df.collect()
-        # pandas/Arrow-backed local frame, NOT createDataFrame(row_list):
-        # a pickled-Python local RDD costs a Python-worker task per core on
-        # EVERY consuming job (measured 33 CPU-s for the usually-EMPTY
-        # flagged accounting); Arrow batches convert JVM-side
-        flagged = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "band_id": pd.array(
-                        [r["band_id"] for r in flagged_rows], dtype="int32"
-                    ),
-                    "band_key": pd.array(
-                        [r["band_key"] for r in flagged_rows], dtype="int64"
-                    ),
-                    "bucket_size": pd.array(
-                        [r["bucket_size"] for r in flagged_rows], dtype="int64"
-                    ),
-                    "action": pd.array(
-                        [r["action"] for r in flagged_rows], dtype=object
-                    ),
-                }
-            ),
-            FLAGGED_SCHEMA,
-        )
-        # the rows are already driver-side — attach them so consumers that
-        # only need counts (the pipeline/streaming accounting) can read
-        # them without scheduling a job over the local frame
-        flagged._cds_local_rows = flagged_rows
-        apply_adjustment = bool(flagged_rows)
+        flagged = flagged_df.collect()
+        adj = _local_adjustment(bucketed.sparkSession, flagged) if flagged else None
     else:
-        flagged = flagged_df
-        apply_adjustment = True  # rides PASS 2's job; no-op when empty
+        flagged, adj = None, flagged_df  # rides PASS 2's job; no-op when empty
 
     bucketed = bucketed.select("nid", "band_key")
-    if apply_adjustment:
+    if adj is not None:
         # one row per band_key (a key shared by two flagged buckets — a
         # 2^-64 collision — must not fan out the join; 'dropped' wins)
         adj = F.broadcast(
-            flagged.groupBy("band_key").agg(F.min("action").alias("action"))
+            adj.groupBy("band_key").agg(F.min("action").alias("action"))
         )
         bucketed = (
             bucketed.join(adj, ["band_key"], "left")
@@ -269,7 +289,7 @@ def pairs_from_buckets(
     tier: str,
     urls: DataFrame | None = None,
     collect_flagged: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row] | None]:
     """Bucket rows (url, band_id, band_key) -> deduped candidate pairs
     (url_a < url_b) + the flagged-bucket accounting of
     ``nid_pairs_from_buckets`` (see its docstring for the skew policy).

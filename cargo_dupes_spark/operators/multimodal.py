@@ -271,58 +271,6 @@ def extract_features(
     return media.mapInPandas(_batches, FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize: REAL block-mean resample + P6 re-encode for image/ppm rows;
-    other codecs keep the schema/partition plumbing with a deterministic
-    truncation (declared boundary — no jpeg/video codec here)."""
-
-    def _resize_one(payload: bytes | None, meta, mtype: str) -> bytes:
-        codec = (
-            (meta or {}).get("codec")
-            if not isinstance(meta, tuple)
-            else meta[3]
-        )
-        if payload and mtype == "image" and codec == "ppm":
-            img = decode_ppm(payload)
-            resized = np.stack(
-                [
-                    _block_mean(img[:, :, c].astype(np.float64), height, width)
-                    for c in range(3)
-                ],
-                axis=2,
-            )
-            return encode_ppm(np.clip(resized, 0, 255).astype(np.uint8))
-        return (payload or b"")[: max(64, width * height // 64)]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["payload"] = [
-                _resize_one(p, m, t)
-                for p, m, t in zip(pdf["payload"], pdf["meta"], pdf["media_type"])
-            ]
-            out["meta"] = [
-                {
-                    "width": width,
-                    "height": height,
-                    "duration_ms": (
-                        (m or {}).get("duration_ms")
-                        if not isinstance(m, tuple)
-                        else m[2]
-                    ),
-                    "codec": (
-                        (m or {}).get("codec")
-                        if not isinstance(m, tuple)
-                        else m[3]
-                    ),
-                }
-                for m in pdf["meta"]
-            ]
-            yield out
-
-    return media.mapInPandas(_batches, MEDIA_SCHEMA)
-
-
 def near_media_dupes(
     features: DataFrame,
     hamming_threshold: int = 3,

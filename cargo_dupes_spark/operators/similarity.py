@@ -129,7 +129,8 @@ def _ann_candidate_pairs(
     candidate shuffle. Here the shuffle carries only (id, band_id, band_key)
     and mega-buckets are salted or dropped WITH accounting.
 
-    Returns (nid_pairs with nid_a < nid_b, flagged accounting frame)."""
+    Returns nid_pairs with nid_a < nid_b; every ANN caller discards the
+    accounting, so PASS 1 runs lazily (``collect_flagged=False``)."""
     from ..config import PipelineConfig
     from .lsh import nid_pairs_from_buckets
 
@@ -153,10 +154,10 @@ def _ann_candidate_pairs(
     )
     # independent hyperplane tables rarely produce identical member sets —
     # the bucket-level dedup pass would be a pure extra exchange here
-    # flagged accounting is discarded by every ANN caller -> lazy PASS 1
-    return nid_pairs_from_buckets(
+    nid_pairs, _ = nid_pairs_from_buckets(
         bucketed, cfg, dedup_buckets=False, collect_flagged=False
     )
+    return nid_pairs
 
 
 def _pair_vectors(
@@ -257,7 +258,7 @@ def lsh_topk(
 
     The candidate shuffle carries 8-byte ids only; vectors meet the (small)
     pair set through the single-shuffle reassembly of ``_pair_vectors``."""
-    nid_pairs, _ = _ann_candidate_pairs(
+    nid_pairs = _ann_candidate_pairs(
         embeddings, dim, n_planes, n_tables, id_col, vec_col, seed,
         max_bucket_size, salt_buckets,
     )
@@ -380,7 +381,7 @@ def embedding_near_dup_pairs(
     Threshold-filters ALL verified candidates — no top-k truncation, so a
     node with hundreds of neighbors above threshold keeps every edge (the
     old top-50 construction silently lost edges in dense clusters)."""
-    nid_pairs, _ = _ann_candidate_pairs(
+    nid_pairs = _ann_candidate_pairs(
         embeddings, dim, n_planes, n_tables, id_col, vec_col, seed,
         max_bucket_size, salt_buckets,
     )

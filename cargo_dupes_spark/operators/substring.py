@@ -12,7 +12,9 @@ window. GUARANTEE: any common substring of length >= k + w - 1 shares at
 least one selected fingerprint, so with k + w - 1 <= min_substring_len the
 candidate stage has perfect recall. Selected fingerprints are position-
 independent (the "reindex from offset 0" analog: a k-gram hashes the same
-wherever it occurs).
+wherever it occurs). ``with_winnow_keys`` is the one place a document
+becomes winnow keys: ``substring_candidates`` explodes them into buckets,
+and the streaming substring tier probes its state with them.
 
 Verification computes the exact longest-common-substring length per pair
 (binary search over length with vectorized uint64 rolling hashes + literal
@@ -30,7 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,109 +89,58 @@ def winnow_udf(k: int, w: int):
     return _winnow
 
 
+def with_winnow_keys(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """docs (url, lang, norm_text, ...) -> the docs that can hold a
+    qualifying repeat, plus ``band_keys`` = their winnowed fingerprints
+    keyed xxhash64(lang, fph): the one rule that turns a document into its
+    substring-tier bucket keys, shared by ``substring_candidates`` and the
+    streaming substring tier.
+
+    Docs shorter than min_substring_len can't contain a qualifying repeat
+    and are gated out before the winnow UDF runs (the min_sub_nodes gate,
+    X2). lang is folded into the key, so cross-lang pairs never co-locate."""
+    fph = winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
+    return docs.filter(
+        F.length("norm_text") >= cfg.min_substring_len
+    ).withColumn("band_keys", F.transform(fph, lambda h: F.xxhash64("lang", h)))
+
+
 def substring_candidates(
     fingerprints: DataFrame,
     cfg: PipelineConfig,
     collect_flagged: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """docs -> (candidate pairs tier='substring', dropped mega-buckets).
-
-    Docs shorter than min_substring_len can't contain a qualifying repeat
-    and are gated out before the explode (the min_sub_nodes gate, X2).
-    """
+) -> tuple[DataFrame, list[Row] | None]:
+    """docs -> (candidate pairs tier='substring', flagged mega-buckets as
+    returned by ``pairs_from_buckets``)."""
     from .lsh import pairs_from_buckets
 
-    eligible = fingerprints.filter(
-        F.length("norm_text") >= cfg.min_substring_len
-    )
-    fps = eligible.select(
-        "url",
-        "lang",
-        F.explode(
-            winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
-        ).alias("fph"),
-    )
-    # pin the winnowed rows: PASS 1 (mega-bucket sizing) and PASS 2 (pair
+    # pin the winnow keys: PASS 1 (mega-bucket sizing) and PASS 2 (pair
     # expansion) in pairs_from_buckets both traverse this plan, and without
     # the checkpoint the winnow UDF — the expensive per-char kernel — runs
     # over the whole corpus TWICE per invocation (guide §1.2: don't compute
-    # things twice). The pinned rows are the selected fingerprints only
-    # (~2% of corpus chars, 24 B/row), MEMORY_AND_DISK so oversized
-    # partitions spill rather than OOM.
-    bucketed = fps.select(
+    # things twice). Pinning BEFORE the explode also matters: the filter
+    # Spark infers for explode(band_keys) (size > 0) would otherwise be
+    # pushed below the projection and evaluate the UDF a second time. The
+    # pinned rows are one key array per doc (~2% of corpus chars),
+    # MEMORY_AND_DISK so oversized partitions spill rather than OOM.
+    keys = with_winnow_keys(fingerprints, cfg).select(
+        "url", "band_keys"
+    ).localCheckpoint(eager=False)
+    bucketed = keys.select(
         "url",
         F.lit(0).alias("band_id"),
-        F.xxhash64("lang", "fph").alias("band_key"),
-    ).localCheckpoint(eager=False)
+        F.explode("band_keys").alias("band_key"),
+    )
     return pairs_from_buckets(
-        bucketed, cfg, "substring", urls=eligible,
+        bucketed, cfg, "substring", urls=keys,
         collect_flagged=collect_flagged,
     )
 
 
-# ---------------------------------------------------------------------------
-# generalized suffix array (the BASELINE.json north_star's named structure):
-# the distributed shape is winnowing-for-candidates + per-pair verification,
-# because a GLOBAL suffix array over 100 TB of text cannot be built without
-# an O(corpus) shuffle per doubling round (log n rounds over every
-# character), while winnowed fingerprints shuffle ~2 % of corpus chars ONCE
-# and verification runs on co-located candidate texts only (BASELINE.md).
-# suffix_array + lcp_array are the GSA reference implementation of that
-# verification; the HOT PATH (verify_substring_pairs) uses the vectorized
-# rolling-hash binary search instead (longest_common_substring_span) — same
-# LENGTH always; when several distinct longest substrings tie, the kernel
-# deterministically reports the span of the earliest occurrence in text a
-# (the GSA argmaxes over suffix-array order and can pick a different tied
-# span), with no per-char interpreter loop (Kasai's h-counter walk cost
-# ~100x a numpy kernel per pair; round-2 bench doubled on it). Tests pin the
-# two implementations against each other and against an O(nm) DP oracle.
-# ---------------------------------------------------------------------------
-
-
-def suffix_array(arr: np.ndarray) -> np.ndarray:
-    """Suffix array of an int array — Manber-Myers doubling, O(n log² n),
-    fully vectorized (lexsort per doubling round)."""
-    n = len(arr)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    rank = np.unique(arr, return_inverse=True)[1].astype(np.int64)
-    k = 1
-    order = np.argsort(rank, kind="stable")
-    while True:
-        rank2 = np.full(n, -1, dtype=np.int64)
-        rank2[: n - k] = rank[k:]
-        order = np.lexsort((rank2, rank))
-        changed = (rank[order[1:]] != rank[order[:-1]]) | (
-            rank2[order[1:]] != rank2[order[:-1]]
-        )
-        new_rank = np.empty(n, dtype=np.int64)
-        new_rank[order] = np.concatenate(([0], np.cumsum(changed)))
-        rank = new_rank
-        if rank[order[-1]] == n - 1:
-            return order
-        k *= 2
-
-
-def lcp_array(arr: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """Kasai LCP: lcp[i] = |common prefix of suffixes sa[i-1], sa[i]|.
-    O(n) total work (the h counter only grows n times)."""
-    n = len(arr)
-    rank = np.empty(n, dtype=np.int64)
-    rank[sa] = np.arange(n)
-    lcp = np.zeros(n, dtype=np.int64)
-    h = 0
-    for i in range(n):
-        r = rank[i]
-        if r > 0:
-            j = sa[r - 1]
-            while i + h < n and j + h < n and arr[i + h] == arr[j + h]:
-                h += 1
-            lcp[r] = h
-            if h:
-                h -= 1
-        else:
-            h = 0
-    return lcp
+# Verification: winnowing finds the candidates and a per-pair kernel
+# verifies them — a global suffix array over the corpus would need an
+# O(corpus) shuffle per doubling round. The generalized-suffix-array
+# formulation is the kernel's test reference (tests/gsa_reference.py).
 
 
 def _first_common_kgram(
@@ -249,9 +200,9 @@ def longest_common_substring_span(
     search then probes lo+1 (galloping), so a pair whose earliest long-
     enough match IS its longest (the common case: one shared span) costs
     two probes instead of a full bisection's log2(n). After
-    _GALLOP_PROBES probes it bisects. The GSA formulation (suffix_array +
-    lcp_array above) is retained as the reference implementation and
-    cross-checked against this kernel in tests/test_substring.py.
+    _GALLOP_PROBES probes it bisects. The GSA formulation (suffix array +
+    LCP, tests/gsa_reference.py) is the reference implementation it is
+    cross-checked against in tests/test_substring.py.
 
     Among equal-length longest substrings the one whose first occurrence
     in `sa_text` is earliest wins; pos_b is the first occurrence in
@@ -282,12 +233,6 @@ def longest_common_substring_span(
     return lo, start, sb_text.find(sub)
 
 
-def longest_common_substring_len(sa: str, sb: str, min_len: int) -> int:
-    """Exact LCS length (in code points) if >= min_len else 0 — the
-    length of ``longest_common_substring_span``."""
-    return longest_common_substring_span(sa, sb, min_len)[0]
-
-
 _SPAN_RESULT = T.StructType(
     [
         T.StructField("lcs_len", T.LongType()),
@@ -303,9 +248,9 @@ def verify_substring_pairs(
     """Candidate pairs -> verified substring edges WITH span offsets.
 
     The vectorized rolling-hash binary search (longest_common_substring_span;
-    GSA-equivalent, see the block comment above) yields the exact longest
-    common substring and its first-occurrence character offsets in both
-    texts — the analog of the reference's member line ranges
+    GSA-equivalent in length, see the block comment above) yields the exact
+    longest common substring and its first-occurrence character offsets in
+    both texts — the analog of the reference's member line ranges
     (dupes-core/src/code_unit.rs:41-55,
     SURVEY X3 span_a/span_b). similarity := lcs_len / min(len_a, len_b) in
     CHARACTERS — 1.0 means full containment (doc B inside doc A), the shape

@@ -22,8 +22,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..functions.shingles import with_shingles
-from ..functions.signatures import signature_udf
 from ..operators.connected_components import connected_components
 from ..operators.exact import (
     apply_gates,
@@ -32,7 +30,12 @@ from ..operators.exact import (
     prepare_columns,
 )
 from ..operators.groups import cluster_memberships, filter_ignored
-from ..operators.lsh import minhash_bands, pairs_from_buckets, simhash_buckets
+from ..operators.lsh import (
+    minhash_bands,
+    pairs_from_buckets,
+    simhash_buckets,
+    with_signatures,
+)
 from ..operators.connected_components import DRIVER_CC_THRESHOLD
 from ..operators.stats import (
     _with_tokens,
@@ -71,8 +74,6 @@ class Pipeline:
         self.stage_log: list[str] = []  # executed vs skipped, for tests
         self._prev_rows: int | None = None  # lineage n_in chain
         self.stage_rows: dict[str, int | None] = {}  # committed row counts
-        self._accounting_thread = None  # concurrent flagged accounting
-        self._accounting_error: BaseException | None = None
 
     _CHAIN = object()  # sentinel: n_in = previous stage's count
 
@@ -214,50 +215,11 @@ class Pipeline:
         )
 
         def build_signatures() -> DataFrame:
-            base = with_shingles(
-                reps.select("url", "lang", "norm_text"),
-                "norm_text",
-                cfg.shingle_k,
-                cfg.shingle_seed,
-            ).drop("norm_text")
-            # fused UDF: one Arrow transfer + one flatten computes both
-            # sketches; simhash is always kept (verify's Hamming prefilter
-            # and the interchangeable-detector contract both read it)
-            sig = signature_udf(
-                cfg.num_perm,
-                cfg.minhash_seed,
-                want_minhash="minhash" in self.detectors,
-                want_simhash=True,
+            # simhash is always kept: verify's Hamming prefilter and the
+            # interchangeable-detector contract both read it
+            return with_signatures(
+                reps, cfg, minhash="minhash" in self.detectors, simhash=True
             )
-            from ..operators.lsh import (
-                minhash_band_keys_col,
-                simhash_chunk_keys_col,
-            )
-
-            out = base.withColumn("_sig", sig(F.col("shingles"))).select(
-                "url",
-                "lang",
-                "shingles",
-                F.col("_sig.minhash").alias("minhash"),
-                F.col("_sig.simhash").alias("simhash"),
-            )
-            # store the LSH keys (32+4 x 8 B) next to the sketches: the
-            # candidate stage scans this table TWICE (bucket sizing + pair
-            # expansion) and needs only the keys — pruning the scan to
-            # band_keys instead of the 1 KB minhash column cuts its input
-            # bytes ~4x at every scale
-            if "minhash" in self.detectors:
-                out = out.withColumn("band_keys", minhash_band_keys_col(cfg))
-            # the raw minhash exists only to derive band_keys (banding reads
-            # band_keys; verify reads shingles + simhash) — committing it
-            # wrote ~1 KB/doc of incompressible hashes that NOTHING ever
-            # read back. Dropping it cuts the signatures stage's write
-            # volume ~35-40% — the stage is DRAM-bound at high core counts
-            # (measured 2.89x over 4x cores at 2.24M docs), so fewer bytes
-            # through the memory bus is a direct strong-scaling win, and at
-            # 100 TB it is ~1 TB of storage per 10^9 docs not written.
-            out = out.drop("minhash")
-            return out.withColumn("chunk_keys", simhash_chunk_keys_col(cfg))
 
         signatures = self._stage("signatures", build_signatures)
 
@@ -265,26 +227,24 @@ class Pipeline:
             # collect_flagged=True (eager PASS 1): the pipeline CONSUMES the
             # mega-bucket accounting, so the sizing aggregation must run
             # somewhere — lazy mode ran it TWICE (once as the broadcast
-            # adjustment subtree inside the commit job, once on the
-            # accounting thread: ~16 executor-CPU-s duplicated at bench
-            # scale, REST stages 106/107), and on a saturated host the
-            # duplicate contends with the commit instead of hiding under
-            # it. Interleaved A/B at 400k docs: eager candidate stage
-            # 2.5-2.8 s vs lazy 2.8-3.1 s, every adjacent pair. Callers
-            # that DISCARD the accounting (the driver-oracle slice queries)
-            # keep collect_flagged=False — for them lazy runs the sizing
-            # once and saves a serial job.
+            # adjustment subtree inside the commit job, once more to collect
+            # the accounting: ~16 executor-CPU-s duplicated at bench scale,
+            # REST stages 106/107). Interleaved A/B at 400k docs: eager
+            # candidate stage 2.5-2.8 s vs lazy 2.8-3.1 s, every adjacent
+            # pair. Callers that DISCARD the accounting (the driver-oracle
+            # slice queries) keep collect_flagged=False — for them lazy runs
+            # the sizing once and saves a serial job.
             parts, flagged_parts = [], []
             if "minhash" in self.detectors:
                 pairs, flagged = pairs_from_buckets(
-                    minhash_bands(signatures, cfg), cfg, "near",
+                    minhash_bands(signatures), cfg, "near",
                     urls=signatures, collect_flagged=True,
                 )
                 parts.append(pairs)
                 flagged_parts.append(flagged)
             if "simhash" in self.detectors:
                 pairs, flagged = pairs_from_buckets(
-                    simhash_buckets(signatures, cfg), cfg, "simhash",
+                    simhash_buckets(signatures), cfg, "simhash",
                     urls=signatures, collect_flagged=True,
                 )
                 parts.append(pairs)
@@ -297,37 +257,13 @@ class Pipeline:
                 flagged_parts.append(flagged)
 
             # never silent: salted and dropped mega-buckets are first-class
-            # metrics (SURVEY §7.4 risk 4) — recorded from a concurrent
-            # driver thread (with eager PASS 1 the rows are already local,
-            # so the thread costs no Spark job; the lazy fallback below
-            # keeps externally-built flagged frames working); run() joins
-            # the thread (and re-raises any failure) before returning, so
-            # callers always see the metric
-            def _account() -> None:
-                self.spark.sparkContext.setJobDescription(
-                    "stage:candidate_pairs (flagged accounting)"
-                )
-                counts = {"salted_buckets": 0.0, "dropped_buckets": 0.0}
-                for flagged in flagged_parts:
-                    rows = getattr(flagged, "_cds_local_rows", None)
-                    if rows is None:  # lazily-built flagged frame: one job
-                        rows = flagged.select("action").collect()
-                    for row in rows:
-                        counts[f"{row['action']}_buckets"] += 1.0
-                self.catalog.record_metrics("candidates", counts)
-
-            import threading
-
-            def _account_guarded() -> None:
-                try:
-                    _account()
-                except BaseException as exc:  # pragma: no cover - loud path
-                    self._accounting_error = exc
-
-            self._accounting_thread = threading.Thread(
-                target=_account_guarded, name="cds-flagged-accounting"
-            )
-            self._accounting_thread.start()
+            # metrics (SURVEY §7.4 risk 4). PASS 1 already collected them;
+            # the metrics append is driver-local and runs no Spark job
+            counts = {"salted_buckets": 0.0, "dropped_buckets": 0.0}
+            for flagged in flagged_parts:
+                for row in flagged:
+                    counts[f"{row['action']}_buckets"] += 1.0
+            self.catalog.record_metrics("candidates", counts)
 
             if not parts:
                 return self.spark.createDataFrame([], CANDIDATE_PAIRS)
@@ -487,16 +423,6 @@ class Pipeline:
                     tier_aggregates(fingerprints, memberships).collect(),
                 ),
             )
-
-        # the flagged-accounting thread (candidate_pairs stage) must land
-        # before run() returns: callers read the metric right after, and a
-        # failed accounting must fail the run, not vanish
-        if self._accounting_thread is not None:
-            self._accounting_thread.join()
-            self._accounting_thread = None
-            err, self._accounting_error = self._accounting_error, None
-            if err is not None:
-                raise err
 
         return {
             "fingerprints": fingerprints,

@@ -38,8 +38,6 @@ def build_session(
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # partition by DATA SIZE, not core count: parallelism-first keeps
         # shuffle_partitions tasks alive even when a stage moves 6 MB (each
         # CC round paid ~32 near-empty tasks × 2 shuffles), while big
@@ -64,7 +62,6 @@ def build_session(
         # engages; it is a small-shuffle shaping choice, not a cluster tune.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(4 * 1024 * 1024))
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", str(2 * 1024 * 1024))
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # dedup work is CPU-heavy per byte (regex normalize, shingle windows,
         # sketch UDFs): 128 MB scan splits cap narrow stages over checkpoint
         # tables at a handful of tasks and leave cores idle. 16 MB gives
@@ -109,7 +106,6 @@ def build_session(
         # host's run-to-run noise. Static conf: set before the JVM starts.
         .config("spark.sql.codegen.cache.maxEntries", "512")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -16,12 +16,13 @@ re-scanning the corpus. This module is that incremental path:
     (Iceberg/parquet), NOT in executor memory: state size is
     corpus-bounded, so it belongs in a table joined per-batch.
   * NEAR tier (``tiers=("exact", "near")``): each batch's canonical docs
-    are checked against accumulated MinHash band-key state with the batch
-    tier's exact shingle/signature config and verified by exact Jaccard
-    (``_process_near_tier``).
+    get their MinHash band keys from the batch tier's own function
+    (``operators/lsh.with_signatures``), are checked against accumulated
+    band-key state and verified by exact Jaccard (``_process_near_tier``).
   * SUBSTRING tier (``tiers`` includes 'substring'): canonical docs'
-    winnowed fingerprints probe accumulated fingerprint state and
-    candidates verify with the exact rolling-hash LCS
+    winnow keys, from the batch tier's own function
+    (``operators/substring.with_winnow_keys``), probe accumulated
+    fingerprint state and candidates verify with the exact rolling-hash LCS
     (``_process_substring_tier``).
   Both run ONE skeleton, ``_probe_tier`` (probe, in-batch pairs, one
   verify call through the batch tier's own ``verify_pairs`` /
@@ -40,8 +41,7 @@ multiplied each append into one file per bucket per writer task. The two
 PAYLOAD tables — ``stream_sigs`` and ``stream_texts`` — stay partitioned
 by pmod(xxhash64(url), cfg.stream_fp_buckets): a batch fetches them only
 for the few urls its probe matched, and that fetch does prune
-(``matched_payload``). ``_flatten_probe_tables`` rewrites probe tables
-that an earlier revision wrote bucketed, once, at stream start.
+(``matched_payload``).
 
 Exactly-once notes: the streaming checkpoint (``checkpointLocation``) makes
 the file source replay a failed batch; the state/membership appends are
@@ -62,8 +62,6 @@ a clean run writes (``_process_exact_tier``).
 
 from __future__ import annotations
 
-import os
-import shutil
 import threading
 from contextlib import contextmanager
 from typing import Callable, NamedTuple
@@ -72,11 +70,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..functions.shingles import with_shingles
-from ..functions.signatures import signature_udf
 from ..operators.exact import apply_gates, prepare_columns
-from ..operators.lsh import minhash_band_keys_col, pairs_from_buckets
-from ..operators.substring import verify_substring_pairs, winnow_udf
+from ..operators.lsh import pairs_from_buckets, with_signatures
+from ..operators.substring import verify_substring_pairs, with_winnow_keys
 from ..operators.verify import verify_pairs
 from ..schemas import WEB_PAGES
 from ..sources.catalog import Catalog
@@ -286,10 +282,9 @@ def _probe_tier(
         tier.name,
         urls=docs,
     )
-    n_flagged = len(flagged._cds_local_rows)  # collected by its PASS 1
-    if n_flagged:
+    if flagged:
         catalog.record_metrics(
-            stage, {"flagged_batch_buckets": float(n_flagged)}
+            stage, {"flagged_batch_buckets": float(len(flagged))}
         )
 
     payload = docs.select("url", tier.payload)
@@ -389,8 +384,8 @@ def _process_near_tier(
 ) -> None:
     """Near tier of one micro-batch, reusing the batch tier's machinery
     end-to-end (north_rule: recall is measured at identical
-    shingle/signature config): shingle -> fused MinHash UDF -> the SAME
-    32-band LSH keys as operators/lsh.py, probed against accumulated
+    shingle/signature config): ``with_signatures`` builds the SAME band
+    keys the pipeline's signatures stage stores, probed against accumulated
     band-key state, verified by EXACT Jaccard (``verify_pairs``) against
     matched state docs' shingles (reference analog: the near tier
     grouper.rs:95-220, applied per increment). ``_probe_tier`` runs it.
@@ -403,22 +398,9 @@ def _process_near_tier(
         sig_bucket = pmod(xxhash64(url), N) — the verify step fetches
         shingles for MATCHED state urls only, pruned to their buckets.
     Hot band keys are accounted as 'dropped_band_keys'."""
-    sig_fn = signature_udf(
-        cfg.num_perm, cfg.minhash_seed, want_minhash=True, want_simhash=False
-    )
-    sigs = (
-        with_shingles(
-            new_docs.select("url", "lang", "norm_text"),
-            "norm_text",
-            cfg.shingle_k,
-            cfg.shingle_seed,
-        )
-        .drop("norm_text")
-        .withColumn("minhash", sig_fn(F.col("shingles"))["minhash"])
-        .withColumn("band_keys", minhash_band_keys_col(cfg))
-        .select("url", "lang", "shingles", "band_keys")
-        .localCheckpoint()  # one Arrow pass; many downstream consumers
-    )
+    sigs = with_signatures(
+        new_docs, cfg, minhash=True, simhash=False
+    ).localCheckpoint()  # one Arrow pass; many downstream consumers
     _probe_tier(_NEAR, sigs, catalog, cfg, batch_id)
 
 
@@ -428,7 +410,8 @@ def _process_substring_tier(
     """Substring tier of one micro-batch (VERDICT r4 #5): a drained batch
     whose doc CONTAINS (or is contained in) a prior doc at
     >= min_substring_len chars is detected, reusing the batch tier's
-    winnowing candidate generation + exact rolling-hash LCS verify
+    winnow keys (``with_winnow_keys``, the function behind
+    ``substring_candidates``) + exact rolling-hash LCS verify
     (operators/substring.py) against accumulated fingerprint state.
     ``_probe_tier`` runs it.
 
@@ -442,20 +425,9 @@ def _process_substring_tier(
         norm_text for MATCHED state urls only, pruned to their buckets.
     Hot fingerprint keys (boilerplate runs shared corpus-wide) are
     accounted as 'dropped_winnow_keys'."""
-    fph = winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
-    docs = (
-        new_docs.filter(F.length("norm_text") >= cfg.min_substring_len)
-        .select("url", "lang", "norm_text", fph.alias("_fph"))
-        .select(
-            "url",
-            "lang",
-            "norm_text",
-            F.transform("_fph", lambda h: F.xxhash64("lang", h)).alias(
-                "band_keys"
-            ),
-        )
-        .localCheckpoint()
-    )
+    docs = with_winnow_keys(
+        new_docs.select("url", "lang", "norm_text"), cfg
+    ).localCheckpoint()
     _probe_tier(_SUBSTRING, docs, catalog, cfg, batch_id)
 
 
@@ -496,7 +468,6 @@ def incremental_dedup(
         raise ValueError(
             "the 'exact' tier is mandatory ('near'/'substring' build on it)"
         )
-    _flatten_probe_tables(catalog)
     near = "near" in tiers
     substring = "substring" in tiers
 
@@ -583,12 +554,6 @@ def _running_alongside(spark: SparkSession, fn: Callable[[], None]):
 
 # url-keyed payload tables and their partition column
 _PAYLOAD_BUCKETS = {SIGS_TABLE: "sig_bucket", TEXTS_TABLE: "text_bucket"}
-# probe tables an earlier revision wrote hive-partitioned, and the column
-_LEGACY_PROBE_BUCKETS = {
-    STATE_TABLE: "fp_bucket",
-    BANDS_TABLE: "band_bucket",
-    WINNOW_TABLE: "win_bucket",
-}
 
 
 def _url_bucket_col(cfg: PipelineConfig, table: str, url_col: str = "url"):
@@ -622,47 +587,6 @@ def matched_payload(
     return (
         catalog.read(table).filter(F.col(bucket).isin(buckets)).dropDuplicates()
     )
-
-
-def _flatten_probe_tables(catalog: Catalog) -> None:
-    """Rewrite probe tables that an earlier revision wrote hive-partitioned
-    (``<root>/<bucket>=N/*.parquet``) into the flat layout appends now
-    use. Runs at stream start; a flat table is left as it is.
-
-    Spark cannot list a root holding both flat part-files and partition
-    directories, so the root is swapped whole, never edited in place:
-      1. hard-link every part-file into ``<root>__flat`` (its bucket
-         directory prefixed to the name: Spark repeats file names across
-         the buckets of one write). Hive layouts keep the bucket column in
-         the path, not in the files, so no data is rewritten;
-      2. rename ``<root>`` to ``<root>__bucketed``;
-      3. rename ``<root>__flat`` to ``<root>``;
-      4. delete ``<root>__bucketed``.
-    A crash anywhere is repaired by the next start: ``<root>__bucketed``
-    exists only once step 1 finished, so step 3 is completed from it if
-    needed and the old tree removed; a ``<root>__flat`` without it is an
-    unfinished step 1 and is rebuilt from scratch. Iceberg tables are left
-    alone: Iceberg evolves a partition spec in place."""
-    if catalog.iceberg:  # pragma: no cover - exercised only with the jar
-        return
-    for name, bucket in _LEGACY_PROBE_BUCKETS.items():
-        root = catalog._path(name)
-        staged = root.with_name(f"{name}__flat")
-        retired = root.with_name(f"{name}__bucketed")
-        if retired.exists():
-            if not root.exists():
-                staged.rename(root)
-            shutil.rmtree(retired)
-        shutil.rmtree(staged, ignore_errors=True)
-        parts = sorted(root.glob(f"{bucket}=*/*.parquet"))
-        if not parts:
-            continue
-        staged.mkdir()
-        for part in parts:
-            os.link(part, staged / f"{part.parent.name}-{part.name}")
-        root.rename(retired)
-        staged.rename(root)
-        shutil.rmtree(retired)
 
 
 def load_stream_state(catalog: Catalog) -> DataFrame:

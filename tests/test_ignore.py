@@ -57,3 +57,28 @@ def test_stale_detection_and_cleanup(spark, tmp_path):
     removed = remove_stale(cat, memberships)
     assert {r.fingerprint for r in removed.collect()} == {777}
     assert {r.fingerprint for r in load_ignore(cat).collect()} == {10}
+
+
+def test_cli_report_wide_fingerprints(tmp_path):
+    """`cli report` at fingerprint_bits = 128 with no ignore table yet: the
+    empty ignore list must take the 128-bit (string) schema, so the
+    report's anti-join does not fail on a bigint/string mismatch."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    cfg_path = tmp_path / "pipeline.toml"
+    cfg_path.write_text("[pipeline]\nfingerprint_bits = 128\n")
+    proc = subprocess.run(
+        [
+            sys.executable, "-m", "cargo_dupes_spark.cli",
+            "--config", str(cfg_path),
+            "--warehouse", str(tmp_path / "wh"),
+            "--parallelism", "4",
+            "--detectors", "minhash",
+            "report",
+        ],
+        capture_output=True, text=True, timeout=600,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

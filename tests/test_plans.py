@@ -44,7 +44,7 @@ def test_gates_push_into_parquet_scan(spark, tmp_path, tmp_cfg, fixture_corpus):
 def test_candidate_band_scan_prunes_heavy_columns(spark, tmp_path, tmp_cfg):
     """minhash_bands over a parquet signatures table must read ONLY
     (url, band_keys) — the 1 KB minhash and the shingle arrays must be
-    pruned out of ReadSchema (operators/lsh.py:57-72; the candidate stage
+    pruned out of ReadSchema (operators/lsh.py minhash_bands; the candidate stage
     scans this table twice, so an unpruned scan doubles its IO)."""
     rows = [
         ("u%d" % i, list(range(i, i + 8)), [i] * 4, i * 7, [i, i + 1])
@@ -54,7 +54,7 @@ def test_candidate_band_scan_prunes_heavy_columns(spark, tmp_path, tmp_cfg):
         rows, "url string, shingles array<bigint>, minhash array<bigint>, "
         "simhash bigint, band_keys array<bigint>"
     ).write.mode("overwrite").parquet(str(tmp_path / "sigs"))
-    bands = minhash_bands(spark.read.parquet(str(tmp_path / "sigs")), tmp_cfg)
+    bands = minhash_bands(spark.read.parquet(str(tmp_path / "sigs")))
     plan = _plan(bands)
     schema_part = plan.split("ReadSchema:", 1)
     assert len(schema_part) == 2, plan

@@ -23,10 +23,8 @@ from cargo_dupes_spark.functions.minhash import (
     perm_params,
 )
 from cargo_dupes_spark.functions.simhash import simhash_batch
-from cargo_dupes_spark.operators.substring import (
-    longest_common_substring_len,
-    longest_common_substring_span,
-)
+from cargo_dupes_spark.operators.substring import longest_common_substring_span
+from gsa_reference import longest_common_substring_len
 
 _U64 = 1 << 64
 _MSB = 1 << 63

@@ -140,6 +140,17 @@ def test_pipeline_fan_out_is_conditional(spark):
     assert pipe._fan_out_input(narrow).rdd.getNumPartitions() >= par
     # already-parallel input is left untouched (no extra exchange)
     assert pipe._fan_out_input(wide) is wide
+    # build_session leaves these to Spark's defaults; the effective
+    # values must stay what the session used to set explicitly
+    assert [
+        spark.conf.get(k)
+        for k in (
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.adaptive.skewJoin.enabled",
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+        )
+    ] == ["true", "true", "true", "10000"]
 
 
 def test_near_clusters_shortcut_matches_full_operator(spark):
@@ -308,10 +319,8 @@ def test_memberships_carry_n_tokens_and_stats_skip_join(spark):
 
 
 def test_pipeline_flagged_accounting_still_recorded(spark, tmp_path):
-    # the candidate stage's PASS-1 accounting now runs on a concurrent
-    # driver thread (lazy collect_flagged) — mega-bucket counts must still
-    # land in the catalog metrics by the time run() returns, and with the
-    # same values the eager path produced
+    # the candidate stage records the mega-bucket counts PASS 1 collected
+    # — they must be in the catalog metrics by the time run() returns
     from cargo_dupes_spark.plans.pipeline import Pipeline
 
     base = (
@@ -336,4 +345,3 @@ def test_pipeline_flagged_accounting_still_recorded(spark, tmp_path):
     # 40 near-identical docs vs cap 4 * salt 2: every minhash band bucket
     # is a dropped mega-bucket
     assert m["dropped_buckets"] > 0
-    assert pipe._accounting_thread is None  # joined before run() returned

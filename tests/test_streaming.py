@@ -6,7 +6,6 @@ ingest stats."""
 from __future__ import annotations
 
 import datetime as dt
-import shutil
 
 import pytest
 
@@ -655,90 +654,63 @@ def test_crash_before_exact_commit_replays_clean(
     assert tables(crashed) == clean
 
 
-def _forge_bucketed(spark, src: Catalog, dst, table, key, bucket):
-    """Write ``table`` the way the bucketed revision did: hive-partitioned
-    by pmod(xxhash64(key), 64), the bucket column only in the path."""
+# ---------------------------------------------------------------------------
+# one candidate-key path: the streaming tiers' state keys are the bucket keys
+# the batch tier builds for the same docs
+# ---------------------------------------------------------------------------
+def test_stream_band_keys_match_pipeline_signatures(spark, stream_env, tmp_path):
     from pyspark.sql import functions as F
 
-    src.read(table).withColumn(
-        bucket, F.pmod(F.xxhash64(key), F.lit(64)).cast("int")
-    ).write.partitionBy(bucket).parquet(str(dst / table))
-
-
-def test_bucketed_probe_tables_flatten_on_resume(
-    spark, stream_env, tmp_path, monkeypatch
-):
-    """A warehouse with hash-bucketed probe tables (the previous layout) is
-    rewritten flat at stream start and keeps detecting cross-wave exact and
-    near dups — also when the rewrite crashed between its renames, leaving
-    a table root missing."""
-    from pathlib import Path
-
-    from cargo_dupes_spark.streaming.incremental import (
-        BANDS_TABLE,
-        DUPS_TABLE,
-        NEAR_DUPS_TABLE,
-        SIGS_TABLE,
-        STATE_TABLE,
-        incremental_dedup,
-        load_stream_near_dups,
-    )
+    from cargo_dupes_spark.plans.pipeline import Pipeline
+    from cargo_dupes_spark.streaming.incremental import BANDS_TABLE
 
     cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, WAVE1 + NEAR_WAVE1).coalesce(1).write.mode("append").parquet(
-        drop_dir
-    )
+    # three docs no two of which are near dups: all enter band state
+    rows = [NEAR_WAVE1[0], NEAR_WAVE1[2], NEAR_WAVE2[1]]
+    _pages(spark, rows).coalesce(1).write.mode("append").parquet(drop_dir)
     _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+    got = {(r.url, r.band_key) for r in catalog.read(BANDS_TABLE).collect()}
 
-    wh2 = tmp_path / "wh_bucketed"
-    old = Catalog(spark, str(wh2), cfg.config_hash())
-    _forge_bucketed(spark, catalog, wh2, STATE_TABLE, "fingerprint", "fp_bucket")
-    _forge_bucketed(spark, catalog, wh2, BANDS_TABLE, "band_key", "band_bucket")
-    for table in (SIGS_TABLE, DUPS_TABLE, NEAR_DUPS_TABLE):
-        shutil.copytree(catalog._path(table), wh2 / table)
-    state_before = _rows(old, STATE_TABLE, "url", "fingerprint")
-    bands_before = _rows(old, BANDS_TABLE, "url", "band_key")
-    assert list((wh2 / BANDS_TABLE).glob("band_bucket=*"))
-
-    drops2 = tmp_path / "drops2"
-    drops2.mkdir()
-    _pages(spark, WAVE2 + NEAR_WAVE2).coalesce(1).write.mode("append").parquet(
-        str(drops2)
+    batch_cfg = PipelineConfig(warehouse=str(tmp_path / "wh_batch"))
+    out = Pipeline(spark, batch_cfg, detectors=("minhash",)).run(
+        _pages(spark, rows)
     )
-    stream2 = read_web_pages_stream(spark, str(drops2))
-    ckpt2 = str(tmp_path / "ckpt_bucketed")
-
-    # crash between the rewrite's renames: stream_bands is parked under
-    # its __bucketed name and its flat copy is not in place yet
-    real_rename = Path.rename
-
-    def crash_on_bands(self, target):
-        if Path(target).name == BANDS_TABLE:
-            raise OSError("simulated crash")
-        return real_rename(self, target)
-
-    monkeypatch.setattr(Path, "rename", crash_on_bands)
-    with pytest.raises(OSError, match="simulated crash"):
-        incremental_dedup(stream2, old, cfg, ckpt2, tiers=("exact", "near"))
-    monkeypatch.undo()
-    assert not (wh2 / BANDS_TABLE).exists()
-    assert (wh2 / f"{BANDS_TABLE}__bucketed").is_dir()
-
-    _drain_near(stream2, old, cfg, ckpt2)
-    leftovers = [p.name for p in wh2.iterdir() if "__" in p.name]
-    assert not leftovers
-    for table in (STATE_TABLE, BANDS_TABLE):
-        root = wh2 / table
-        assert not [p for p in root.iterdir() if p.is_dir()], table
-    # the flattened rows are the bucketed rows, and the wave-2 rows joined
-    assert state_before < _rows(old, STATE_TABLE, "url", "fingerprint")
-    assert bands_before < _rows(old, BANDS_TABLE, "url", "band_key")
-    dups = {(r.url, r.matched_url) for r in load_stream_dups(old).collect()}
-    assert ("http://b.example/9", "http://a.example/1") in dups
-    near = {
-        (r.url, r.matched_url) for r in load_stream_near_dups(old).collect()
+    want = {
+        (r.url, r.band_key)
+        for r in out["signatures"]
+        .select("url", F.explode("band_keys").alias("band_key"))
+        .collect()
     }
-    assert ("http://o.example/9", "http://n.example/1") in near
+    assert {u for u, _ in want} == {r[0] for r in rows}
+    assert got == want
+
+
+def test_stream_winnow_keys_match_substring_candidates(
+    spark, stream_env, monkeypatch
+):
+    from cargo_dupes_spark.operators import lsh
+    from cargo_dupes_spark.operators.exact import apply_gates, prepare_columns
+    from cargo_dupes_spark.operators.substring import substring_candidates
+    from cargo_dupes_spark.streaming.incremental import WINNOW_TABLE
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, SUB_WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain_substr(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+    got = {(r.url, r.band_key) for r in catalog.read(WINNOW_TABLE).collect()}
+
+    # the bucket rows substring_candidates hands to pair generation
+    seen = []
+    real = lsh.pairs_from_buckets
+
+    def spy(bucketed, *args, **kwargs):
+        seen.append({(r.url, r.band_key) for r in bucketed.collect()})
+        return real(bucketed, *args, **kwargs)
+
+    monkeypatch.setattr(lsh, "pairs_from_buckets", spy)
+    fps = apply_gates(prepare_columns(_pages(spark, SUB_WAVE1), cfg), cfg)
+    substring_candidates(fps, cfg)
+    assert {u for u, _ in got} == {r[0] for r in SUB_WAVE1}
+    assert seen == [got]
 
 
 def test_repeated_url_in_drop_keeps_one_row(spark, stream_env):

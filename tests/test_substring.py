@@ -10,12 +10,10 @@ import pytest
 from cargo_dupes_spark.config import PipelineConfig
 from cargo_dupes_spark.operators.substring import (
     _kgram_hashes,
-    lcp_array,
-    longest_common_substring_len,
     longest_common_substring_span,
-    suffix_array,
     winnow,
 )
+from gsa_reference import lcp_array, longest_common_substring_len, suffix_array
 
 CFG = PipelineConfig()
 
